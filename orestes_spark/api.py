@@ -28,7 +28,7 @@ import time as _time
 from collections.abc import Iterator
 from typing import Any
 
-from orestes_spark.engine import OrestesEngine
+from orestes_spark.engine import ConcurrentWriterError, OrestesEngine
 from orestes_spark.esdsl import UnsupportedDslError
 
 
@@ -66,10 +66,14 @@ _OVERLOAD_PATTERNS = [
 def categorize_error(err: Exception) -> ApiError:
     """Wrap an arbitrary engine exception in the reference's error
     contract: overload signatures become 503, everything else 500
-    INTERNAL (/root/reference/lib/middleware/error-handler.js:25-35)."""
+    INTERNAL (/root/reference/lib/middleware/error-handler.js:25-35).
+    A write refused by the space's writer lock is a 409 CONFLICT: a
+    foreseeable condition the client retries, not a server fault."""
     if isinstance(err, ApiError):
         return err
     msg = str(err)
+    if isinstance(err, ConcurrentWriterError):
+        return ApiError(409, msg, "CONFLICT")
     status = 503 if any(p.search(msg) for p in _OVERLOAD_PATTERNS) else 500
     return ApiError(status, msg)
 

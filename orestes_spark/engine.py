@@ -245,6 +245,10 @@ _HOSTNAME = _socket.gethostname()
 # Streaming-epoch file tag (see _append.write_points): epochN-<part>.parquet
 _EPOCH_TAG_RE = _re.compile(r"^epoch(-?\d+)-")
 
+# The series table as its reader sees it: the parquet data columns,
+# then the bucket=* partition column.
+_SERIES_DDL = "series_id STRING, tags MAP<STRING,STRING>, bucket INT"
+
 
 def _committed_epochs(points_root: Path) -> set[int]:
     return {
@@ -861,9 +865,32 @@ class OrestesEngine:
                 # holds, and the only cost is merge-priced reads until
                 # the next compaction. Never a duplicate served.
                 self._mark_delivery(space)
+            # An Arrow table, not a list of tuples: below Spark's
+            # arrow.localRelationThreshold the plan is a LocalRelation
+            # with a known size, so Catalyst folds the time parse and
+            # the validation split on the driver (no job for the error
+            # collect) and _write_partitions sees the real batch size.
+            # A list goes through sc.parallelize: an RDD of unknown
+            # size that nothing folds. str(time) is the STRING
+            # conversion createDataFrame applies to a list (bar
+            # True → "true", which parses no better than "True").
+            import pyarrow as pa
+
             df = self.spark.createDataFrame(
-                [(r["time"], r["value"], r["tags"]) for r in valid_rows],
-                "time STRING, value DOUBLE, tags MAP<STRING,STRING>",
+                pa.table(
+                    {
+                        "time": [None if r["time"] is None else str(r["time"]) for r in valid_rows],
+                        "value": [r["value"] for r in valid_rows],
+                        "tags": [list(r["tags"].items()) for r in valid_rows],
+                    },
+                    schema=pa.schema(
+                        [
+                            ("time", pa.string()),
+                            ("value", pa.float64()),
+                            ("tags", pa.map_(pa.string(), pa.string())),
+                        ]
+                    ),
+                )
             ).select(
                 schema.normalize_time_col(F.col("time")).alias("time_ms"),
                 F.col("value"),
@@ -893,10 +920,11 @@ class OrestesEngine:
         valid, err_df = validation.split_valid(
             df.select("time_ms", "value", "tags"), null_time_err
         )
-        # Per-point error reporting, never batch abort (S4). Collecting
-        # the error side-output is an extra job; callers on the hot
-        # path can pre-validate and use _append directly. The collect
-        # is bounded (limit + count), never an unbounded driver pull.
+        # Per-point error reporting, never batch abort (S4). For list
+        # input the error side-output folds into the driver-side
+        # LocalRelation and the collect runs no Spark job; a DataFrame
+        # input pays one job for it. The collect is bounded
+        # (limit + count), never an unbounded driver pull.
         err_rows = err_df.limit(max_errors).collect()
         for row in err_rows:
             errors.append({"point": row.asDict(recursive=True), "error": row["error"]})
@@ -915,14 +943,17 @@ class OrestesEngine:
         return errors
 
     def _write_partitions(self, df: DataFrame) -> int:
-        """Size-based shuffle width for the points write: one range
-        partition per ~128 MB of input (the healthy parquet-file size),
-        floored at a quarter of the cluster's core count so small
-        batches still parallelize, and falling back to the session's
-        shuffle-partition default when Catalyst has no size estimate
-        (the unknown-size sentinel is ~Long.Max). At 100 TB the
-        bytes/128 MB term dominates and yields ~800k write tasks; on a
-        small batch it stops 32 near-empty parquet files per bucket."""
+        """Size-based width for the points write: one range partition
+        per ~128 MB of input (the healthy parquet-file size), floored
+        at a quarter of the cluster's core count so small batches
+        still parallelize. A list batch from ``write`` is a
+        LocalRelation with an exact size, so a /write-sized batch gets
+        the floor (1 on a 4-core driver, which _append lays out with
+        a shuffle-free coalesce). Plans with no size estimate (the
+        unknown-size sentinel is ~Long.Max) — RDD-backed frames, a
+        list above Spark's local-relation threshold — fall back to the
+        session's shuffle-partition default. At 100 TB the
+        bytes/128 MB term dominates and yields ~800k write tasks."""
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         sc = df.sparkSession.sparkContext
         floor = max(1, sc.defaultParallelism // 4)
@@ -992,7 +1023,16 @@ class OrestesEngine:
             return
         seq = max(int(_time.time() * 1000), self._last_seq + 1)
         self._last_seq = seq
-        stored = schema.with_derived(valid, g).withColumn("_seq", F.lit(seq).cast("long"))
+
+        def stored() -> DataFrame:
+            # A fresh derived frame per sink, never one shared frame:
+            # the sinks plan on concurrent threads, and over a
+            # LocalRelation Catalyst evaluates series_id_col's
+            # transform lambda on the driver — one shared lambda
+            # variable evaluated by two threads moves points between
+            # series.
+            return schema.with_derived(valid, g).withColumn("_seq", F.lit(seq).cast("long"))
+
         epoch_moved: list[str] = []  # filled by write_points (streaming)
 
         def write_points() -> None:
@@ -1001,10 +1041,15 @@ class OrestesEngine:
             # stats prune non-matching series at read time) while a hot
             # bucket can still split across tasks — hash partitioning by
             # (bucket, series) interleaves series across files and
-            # tripled write time.
-            laid_out = stored.repartitionByRange(
-                self._write_partitions(stored), F.col("bucket"), F.col("series_id")
-            ).sortWithinPartitions("bucket", "series_id", "time_ms")
+            # tripled write time. A width of 1 is the same layout
+            # without the shuffle.
+            pts = stored()
+            width = self._write_partitions(pts)
+            if width == 1:
+                pts = pts.coalesce(1)
+            else:
+                pts = pts.repartitionByRange(width, F.col("bucket"), F.col("series_id"))
+            laid_out = pts.sortWithinPartitions("bucket", "series_id", "time_ms")
             if epoch_id is None:
                 if not (points_path / "_epochs").exists():
                     # batch-only space: plain append, zero manifest
@@ -1108,7 +1153,7 @@ class OrestesEngine:
         def write_series() -> None:
             # Metadata upsert with write-time dedup (D2): distinct new
             # (bucket, series) anti-joined against what's already known.
-            new_series = stored.select("bucket", "series_id", "tags").dropDuplicates(
+            new_series = stored().select("bucket", "series_id", "tags").dropDuplicates(
                 ["bucket", "series_id"]
             )
             existing = self._read_series(space)
@@ -1132,7 +1177,7 @@ class OrestesEngine:
             # float drift, so any merge order (appends, compaction,
             # read groupings) yields the identical value — the same
             # exactness discipline the query oracles rely on.
-            partial = stored.groupBy("bucket", "series_id", slot.alias("slot_ms")).agg(
+            partial = stored().groupBy("bucket", "series_id", slot.alias("slot_ms")).agg(
                 F.first("tags").alias("tags"),
                 F.count(F.lit(1)).alias("n"),
                 F.sum(F.col("value").cast("decimal(28,10)")).alias("sum_value"),
@@ -1167,7 +1212,7 @@ class OrestesEngine:
                 F.greatest(F.floor(F.col("value") / width), F.lit(0)), F.lit(nbins - 1)
             ).cast("int")
             partial = (
-                stored.groupBy("bucket", "series_id", slot.alias("slot_ms"), b.alias("bin"))
+                stored().groupBy("bucket", "series_id", slot.alias("slot_ms"), b.alias("bin"))
                 .agg(F.first("tags").alias("tags"), F.count(F.lit(1)).alias("cnt"))
                 .withColumn("epoch", F.lit(-1 if epoch_id is None else epoch_id))
             )
@@ -1418,7 +1463,8 @@ class OrestesEngine:
         self._recover(space, p)
         if not p.exists() or not any(p.glob("bucket=*")):
             return None
-        return self.spark.read.parquet(str(p))
+        # The table's fixed schema: inferring it is a Spark job.
+        return self.spark.read.schema(_SERIES_DDL).parquet(str(p))
 
     def _empty(self, ddl: str) -> DataFrame:
         return self.spark.createDataFrame([], ddl)

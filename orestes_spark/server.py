@@ -99,6 +99,8 @@ class _Handler(BaseHTTPRequestHandler):
         self.send_response(status)
         self.send_header("Content-Type", "application/json")
         self.send_header("Content-Length", str(len(data)))
+        if status == 409:  # writer-lock refusal: the lock frees within a write
+            self.send_header("Retry-After", "1")
         self.end_headers()
         self.wfile.write(data)
 

@@ -16,7 +16,9 @@ identical so clients can match on them:
 
 Implementation is a declarative split: one pass computes an ``error``
 column with ``when`` chains; ``valid``/``errors`` are two filters over
-the same cached frame — Catalyst collapses each into a single scan.
+the same classified frame, which is not cached — Catalyst collapses each
+into a single scan. Over a driver-side LocalRelation (``engine.write``'s
+list input) it evaluates both filters on the driver, with no Spark job.
 Nested-tag rejection happens at the adapter layer (a MAP<STRING,STRING>
 column cannot hold an object/array; the list-of-dicts adapter checks).
 """

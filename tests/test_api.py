@@ -15,6 +15,7 @@ from orestes_spark.api import (
     stream_read,
     stream_read_response,
 )
+from orestes_spark.engine import ConcurrentWriterError
 
 START = 1_700_000_000_000
 
@@ -118,6 +119,8 @@ def test_error_response_shapes():
     assert status == 503
     status, _ = error_response(RuntimeError("java.lang.OutOfMemoryError: heap"))
     assert status == 503
+    status, body = error_response(ConcurrentWriterError("space 'x' is locked by a live writer"))
+    assert status == 409 and body["code"] == "CONFLICT"
 
 
 def test_delete_and_errors(loaded):

@@ -150,6 +150,20 @@ def test_series_and_select_distinct(engine):
 
 
 def test_write_validation_errors(engine):
+    # Every representation a JSON time can take, with the epoch ms it
+    # stores (None: rejected as an invalid timestamp).
+    times = [
+        (START, START),
+        (START + 0.5, START),  # double → long truncates
+        (str(START + 123), START + 123),
+        ("2023-11-14T22:13:20Z", START),
+        ("2023-11-14T22:13:20+05:30", START - 19_800_000),
+        ("2023-11-14T22:13:20", START),  # no zone: session zone, UTC
+        ("2023-11-14 22:13:20.250", START + 250),
+        ("not-a-time", None),
+        (True, None),
+        (None, None),
+    ]
     errs = engine.write(
         [
             {"value": 1, "name": "dave"},
@@ -159,6 +173,7 @@ def test_write_validation_errors(engine):
             {"time": 1, "value": 1, "name": {"nested": True}},
             {"time": START, "value": 2.0, "name": "ok"},
         ]
+        + [{"time": t, "value": float(i), "t": f"t{i}"} for i, (t, _) in enumerate(times)]
     )
     msgs = [e["error"] for e in errs]
     assert msgs == [
@@ -167,8 +182,77 @@ def test_write_validation_errors(engine):
         "metrics must have at least one tag",
         "invalid value NaN",  # JS spelling
         "invalid tag - value is an object or array name : [object Object]",
+    ] + ["invalid timestamp"] * 3
+    assert [e["point"] for e in errs[-3:]] == [
+        {"time_ms": None, "value": float(i), "tags": {"t": f"t{i}"}, "error": "invalid timestamp"}
+        for i, (_, ms) in enumerate(times)
+        if ms is None
     ]
-    assert engine.read().count() == 1  # the good point landed
+    got = read_as_model(engine)
+    assert got.pop("name=ok") == ({"name": "ok"}, [(START, 2.0)])  # the good point landed
+    assert got == {
+        f"t=t{i}": ({"t": f"t{i}"}, [(ms, float(i))]) for i, (_, ms) in enumerate(times) if ms is not None
+    }
+
+
+def _batch(b, space, n=500):
+    """Batch ``b`` of a space: n points over 10 two-tag series, at
+    times no other batch uses."""
+    t0 = START + b * n * 1000
+    return [
+        {"time": t0 + i * 1000, "value": float(i), "host": f"h{i % 10}", "space": space}
+        for i in range(n)
+    ]
+
+
+def test_concurrent_list_writes_keep_points_in_their_series(spark, tmp_path):
+    """Writers on several threads through one engine, a space each:
+    every space reads back exactly its acknowledged points, series by
+    series. The sinks of one write plan on threads of their own, and
+    over a driver-side LocalRelation Catalyst evaluates the series_id
+    lambda there — a derived frame shared between sinks races on it
+    and moves points between series."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from orestes_spark.engine import OrestesEngine
+
+    eng = OrestesEngine(spark, str(tmp_path / "wh"))
+    spaces = [f"s{k}" for k in range(4)]
+
+    def writer(space):
+        acked = []
+        for b in range(8):
+            pts = _batch(b, space)
+            assert eng.write(pts, space) == []
+            acked += pts
+        return acked
+
+    with ThreadPoolExecutor(max_workers=len(spaces)) as pool:
+        acked = dict(zip(spaces, pool.map(writer, spaces, timeout=600)))
+    for space in spaces:
+        assert read_as_model(eng, space=space) == model_series(acked[space])
+
+
+def test_small_list_write_job_and_file_budget(engine, spark):
+    """A /write-sized list batch into a space that already holds data
+    costs at most 4 Spark jobs and adds exactly one points file: the
+    time parse and validation split fold into a driver-side
+    LocalRelation, the points sink coalesces instead of
+    range-shuffling, and the series table is read with its fixed
+    schema (no inference job)."""
+    import pytest
+
+    if spark.sparkContext.defaultParallelism >= 8:
+        pytest.skip("the points write floors at cores/4 > 1 partitions here")
+    assert engine.write(_batch(0, "a")) == []
+    points = engine._points_path("default")
+    files = set(points.glob("bucket=*/*.parquet"))
+    st = spark.sparkContext.statusTracker()
+    before = set(st.getJobIdsForGroup(None))
+    assert engine.write(_batch(1, "a")) == []
+    jobs = set(st.getJobIdsForGroup(None)) - before
+    assert len(jobs) <= 4, sorted(jobs)
+    assert len(set(points.glob("bucket=*/*.parquet")) - files) == 1
 
 
 def test_space_isolation_and_granularity(engine):

@@ -171,3 +171,38 @@ def test_http_concurrent_reads(port):
         assert status == 200
         (s,) = out["series"]
         assert s["tags"] == {"host": host} and len(s["points"]) == 5
+
+
+def test_http_write_refused_by_writer_lock_is_409(spark, tmp_path):
+    """A live foreign writer holding the space's lock makes /write a
+    409 CONFLICT with Retry-After — a contract status the client
+    retries, never a 500 — and the write lands once the lock frees."""
+    import os
+
+    from orestes_spark.engine import OrestesEngine
+
+    engine = OrestesEngine(spark, str(tmp_path / "wh"))
+    srv = serve(engine)
+    port = srv.server_address[1]
+    try:
+        lock = engine._lock_path("default")
+        lock.parent.mkdir(parents=True)
+        # our own pid is alive, and this engine does not hold the lock
+        lock.write_text(json.dumps({"pid": os.getpid(), "op": "append", "ts_ms": 0}))
+        pts = [{"time": START, "value": 1.0, "host": "a"}]
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{port}/write", data=json.dumps(pts).encode(), method="POST"
+        )
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            urllib.request.urlopen(req, timeout=120)
+        assert ei.value.code == 409
+        assert ei.value.headers["Retry-After"] == "1"
+        out = json.loads(ei.value.read().decode())
+        assert out["code"] == "CONFLICT" and "live writer" in out["message"]
+
+        lock.unlink()
+        assert _post(port, "/write", pts) == (200, {"errors": []})
+        status, out = _post(port, "/read", {"end": START + 100})
+        assert status == 200 and out["series"][0]["points"] == [[START, 1.0]]
+    finally:
+        srv.shutdown()
