@@ -24,35 +24,28 @@ on three primitives this module owns:
 ``PosixCommitBackend`` is the default and the only backend the
 engine constructs itself; ``engine._require_posix_warehouse`` refuses
 object-store warehouses loudly because rename/link are not atomic
-there. At that tier the SAME three protocols map onto a lakehouse
-table format's transaction log — ``DeltaEpochSink`` below prototypes
-the mapping for the streaming-epoch-commit path with Delta Lake OSS
-(public API: https://docs.delta.io), import-gated on ``delta-spark``:
+there. At that tier the same three protocols belong to a lakehouse
+table format's transaction log (Delta Lake, Iceberg). The mapping:
 
-| engine protocol (POSIX)            | Delta equivalent (prototype)    |
+| engine protocol (POSIX)            | table-format equivalent         |
 |------------------------------------|---------------------------------|
-| staged files + epoch manifest      | one table commit (snapshot-     |
-| (all-or-nothing read visibility)   | isolated) — ``DeltaEpochSink``  |
-| epoch marker as replay idempotency | ``txnAppId``/``txnVersion``     |
-| key (replayed epoch = no-op)       | idempotent writes — same class  |
+| staged files + epoch manifest      | one snapshot-isolated table     |
+| (all-or-nothing read visibility)   | commit per epoch                |
+| epoch marker as replay idempotency | idempotent writes keyed by      |
+| key (replayed epoch = no-op)       | (app id, version)               |
 | writer link-lock + lease + fence   | monotonic-fence lease over an   |
-|                                    | idempotent append log —         |
-|                                    | ``TableFormatWriterLease`` +    |
-|                                    | ``DeltaLeaseLog``               |
-| two-phase partition swap           | ``replaceWhere`` overwrite /    |
-| (erasure, compaction, rollup)      | DELETE+VACUUM —                 |
-|                                    | ``DeltaPartitionSwap``          |
+|                                    | idempotent append log           |
+| two-phase partition swap           | predicate overwrite commit /    |
+| (erasure, compaction, rollup)      | DELETE + VACUUM                 |
 
-All three rows now have code (round-8), and the fence number is
-CARRIED BY DATA COMMITS (round-9): ``LeaseFence`` +
-``fenced_version`` compose an acquired lease's fence into every
-epoch/maintenance commit's idempotency version, so a zombie writer's
-replay is refused by the data table itself — see the
-fencing-arithmetic notes below. The lease/swap protocol LOGIC is
-exercised by the always-on test suite against an in-memory log with
-Delta's exact commit semantics; the thin Delta adapters are
-import-gated and their integration tests skip where delta-spark is
-absent.
+The lease row is implemented here, generic over the log:
+``TableFormatWriterLease`` (the lease), ``LeaseFence`` +
+``fenced_version`` (the fence carried by every data commit's
+idempotency version, so a zombie writer's replay is refused by the
+data table itself — see the fencing-arithmetic notes below),
+``fenced_maintenance`` and ``cas_append``. The test suite drives them
+against in-memory logs with a table format's commit semantics; no
+adapter to a real table format ships.
 """
 
 from __future__ import annotations
@@ -186,172 +179,6 @@ class PosixCommitBackend:
 POSIX_BACKEND = PosixCommitBackend()
 
 
-class DeltaEpochSink:
-    """PROTOTYPE (import-gated on ``delta-spark``): the streaming
-    epoch-commit protocol mapped onto Delta Lake's transaction log —
-    the shape the engine defers to when `_require_posix_warehouse`
-    refuses an object-store path.
-
-    Replaces stage→rename→manifest with ONE Delta commit per epoch:
-
-    - **Atomic visibility**: a Delta commit is snapshot-isolated by
-      the ``_delta_log`` (readers see all of an epoch or none), so
-      the manifest layer — which exists only because readdir over
-      in-flight renames is racy — has no job left to do.
-    - **Replay idempotency**: ``txnAppId=<stream namespace>`` +
-      ``txnVersion=<epoch id>`` is Delta's idempotent-writes API; a
-      replayed epoch's commit is skipped by the table itself, exactly
-      what the engine's epoch markers enforce on POSIX.
-    - **No writer lock**: Delta's optimistic concurrency serializes
-      commits; conflicting maintenance fails the commit and retries
-      instead of corrupting markers.
-
-    Scope is deliberately ONE path — the streaming epoch commit —
-    per the round-7 plan: enough to demonstrate the mapping is real
-    code, not a docs hand-wave. A full backend would add the rollup
-    partials (same txn options), compaction (OPTIMIZE or
-    dataChange=false rewrites) and erasure (DELETE + VACUUM).
-    """
-
-    def __init__(self, spark, table_path: str):
-        import importlib
-
-        if importlib.util.find_spec("delta") is None:  # pragma: no cover
-            raise ModuleNotFoundError(
-                "DeltaEpochSink requires the delta-spark package"
-            )
-        self.spark = spark
-        self.table_path = table_path
-
-    def commit_epoch(
-        self, df, stream_ns: str, epoch_id: int, fence: int | None = None
-    ) -> None:
-        """One idempotent, snapshot-atomic commit for the epoch's
-        points — the Delta analogue of engine._append's staged moves
-        plus manifest publish.
-
-        ``fence`` (round-9): the writer's acquired lease fence
-        (TableFormatWriterLease handle). When given, the commit's
-        idempotency version becomes ``fenced_version(fence,
-        epoch_id + 1)`` so the DATA table itself refuses a zombie's
-        replayed epoch the moment any higher-fence writer has
-        committed (or claimed, see ``claim_fence``) — the wiring the
-        round-8 mapping table promised in prose. A fenced holder must
-        start from ``resume_epoch_floor(stream_ns) + 1`` (or trust its
-        checkpoint) to keep cross-fence epoch idempotency, and a table
-        is either always-fenced or never-fenced — the two encodings'
-        watermarks are not comparable. See the fencing-arithmetic
-        notes above ``fenced_version``."""
-        version = epoch_id if fence is None else fenced_version(fence, epoch_id + 1)
-        (
-            df.write.format("delta")
-            .mode("append")
-            .option("txnAppId", stream_ns)
-            .option("txnVersion", version)
-            .save(self.table_path)
-        )
-
-    def claim_fence(
-        self, stream_ns: str, fence: int, floor: int, schema: str | None = None
-    ) -> None:
-        """Commit an EMPTY claim at ``fenced_version(fence, floor+1)``
-        right after acquiring the lease and reading the floor: raises
-        the data table's fence watermark while preserving the floor,
-        so every zombie commit is refused from this instant — not just
-        from this holder's first data commit. A zero-row append still
-        carries its SetTransaction action, which is all the claim is.
-
-        ``schema`` (review finding r9): on a BRAND-NEW deployment the
-        table does not exist yet — reading it for its schema would
-        fail exactly inside the window the claim exists to close — so
-        the first-ever claimer passes its batch schema (DDL string)
-        and the empty claim commit creates the table with it. The
-        missing-table case is detected with DeltaTable.isDeltaTable,
-        NOT by catching read errors: a transient read failure on an
-        EXISTING table must propagate (retryable), never be
-        misdiagnosed as "table absent" and papered over with the
-        caller's possibly-drifted DDL."""
-        from delta.tables import DeltaTable
-
-        if DeltaTable.isDeltaTable(self.spark, self.table_path):
-            table_schema = self.visible().schema
-        elif schema is None:
-            raise ValueError(
-                f"no Delta table at {self.table_path} yet; the first-ever"
-                " claim must pass schema= (the stream's batch DDL) so the"
-                " empty claim commit can create the table — reading the"
-                " schema back would fail precisely inside the pre-first-"
-                "commit window the claim closes"
-            )
-        else:
-            table_schema = schema
-        empty = self.spark.createDataFrame([], table_schema)
-        claimed = fenced_version(fence, floor + 1)
-        (
-            empty.write.format("delta")
-            .mode("append")
-            .option("txnAppId", stream_ns)
-            .option("txnVersion", claimed)
-            .save(self.table_path)
-        )
-        # Read-back (round-10 ADVICE): the claim's entire job is the
-        # SetTransaction action a zero-row append carries — if this
-        # Delta version elides empty commits, the claim silently did
-        # nothing and the pre-first-commit zombie window stays open.
-        # Fail loudly instead of assuming.
-        after = self._txn_watermark(stream_ns)
-        if after is None or after < claimed:
-            raise RuntimeError(
-                f"claim_fence({stream_ns!r}, fence={fence}) did not advance"
-                f" the table's transaction watermark (now {after}, claimed"
-                f" {claimed}): this Delta version appears to elide zero-row"
-                " commits' SetTransaction actions, so the fence claim is a"
-                " no-op and a zombie writer can still land one stale commit"
-                " before this holder's first epoch. Upgrade delta-spark or"
-                " replace the empty claim with a 1-row commit to a sentinel"
-                " partition."
-            )
-
-    def _txn_watermark(self, stream_ns: str) -> int | None:
-        """The Delta snapshot's per-app transaction watermark — the
-        number commit_epoch's txnVersion advances. delta-spark exposes
-        no public Python accessor for it, so this goes through the
-        Scala DeltaLog (import-gated, like the rest of this adapter);
-        the always-on protocol tests exercise the identical contract
-        against the in-memory twin's watermark."""
-        jlog = self.spark._jvm.org.apache.spark.sql.delta.DeltaLog.forTable(
-            self.spark._jsparkSession, self.table_path
-        )
-        it = jlog.update().setTransactions().iterator()
-        wm = None
-        while it.hasNext():
-            t = it.next()
-            if t.appId() == stream_ns:
-                v = int(t.version())
-                wm = v if wm is None else max(wm, v)
-        return wm
-
-    def resume_epoch_floor(self, stream_ns: str) -> int:
-        """Highest epoch id any fence ever committed for ``stream_ns``
-        (-1 if none): the floor a NEW fence holder must not re-commit
-        at or below. Decoded from the per-app transaction watermark."""
-        return epoch_floor(self._txn_watermark(stream_ns))
-
-    def visible(self):
-        """Snapshot read — committed epochs only, by construction.
-        The replay watermark itself needs no accessor: Delta tracks it
-        per txnAppId inside the table and enforces it at commit time
-        (txnVersion ≤ watermark → the commit is skipped), which is the
-        property the prototype test pins."""
-        return self.spark.read.format("delta").load(self.table_path)
-
-
-def delta_available() -> bool:
-    import importlib
-
-    return importlib.util.find_spec("delta") is not None
-
-
 # --------------------------------------------------- fencing arithmetic ---
 #
 # A data commit carries its writer's lease fence by COMPOSING the fence
@@ -430,10 +257,8 @@ class TableFormatWriterLease:
 
     Generic over an append-only, snapshot-atomic log with idempotent
     ``(app_id, version)`` commits — exactly Delta's ``txnAppId`` /
-    ``txnVersion`` contract. ``DeltaLeaseLog`` is the Delta adapter;
-    the test suite drives this SAME protocol class against an
-    in-memory log with identical commit semantics, so the protocol
-    logic is fully tested even where delta-spark is absent.
+    ``txnVersion`` contract. The test suite drives this protocol class
+    against an in-memory log with those commit semantics.
 
     The log contract has one more requirement beyond append+read:
     every committed row is stamped with the log's own monotonic
@@ -628,8 +453,8 @@ class LeaseFence:
       the version is ``fenced_version(fence, epoch_id + 1)`` (seq 0
       is the reserved fence-claim slot), so the data table's
       watermark refuses a zombie's replayed epoch once any
-      higher-fence writer has committed (see DeltaEpochSink.commit_epoch
-      and the fencing-arithmetic notes above fenced_version).
+      higher-fence writer has committed (see the fencing-arithmetic
+      notes above fenced_version).
     - ``next_txn()`` — maintenance commits (the remove/compact cycle,
       lib/orestes-remover.js:16-53 semantics): a per-lease counter
       under ``app_id='maint:<space>'``. Each cycle's work is freshly
@@ -655,8 +480,8 @@ class LeaseFence:
         return stream_ns, fenced_version(self.fence, epoch_id + 1)
 
     def claim_txn(self, stream_ns: str, floor: int) -> tuple[str, int]:
-        """The empty fence-claim commit's pair (see
-        DeltaEpochSink.claim_fence): same seq component as the old
+        """The empty fence-claim commit's pair (see the fencing-arithmetic
+        notes above fenced_version): same seq component as the old
         watermark, higher fence — zombies are refused from the claim
         on, not merely from this holder's first data commit."""
         return stream_ns, fenced_version(self.fence, floor + 1)
@@ -667,16 +492,17 @@ class LeaseFence:
 
 
 class ConcurrentWriterError(RuntimeError):
-    """A live lease holder exists (or a concurrent stealer won the
-    tie-break) — the table-format twin of the engine's POSIX
-    ConcurrentWriterError on the link-lock path."""
+    """A second writer tried to mutate a space while another live
+    writer holds its lock (single-writer contract, enforced loudly).
+    Raised by the engine's POSIX writer lock and, on the table-format
+    tier, by ``fenced_maintenance`` when the lease is held."""
 
 
 def fenced_maintenance(lease: "TableFormatWriterLease", space: str, owner: str, op: str):
     """Context manager for the remove/compact cycle
     (lib/orestes-remover.js:16-53 semantics) on the table-format tier:
     acquire → yield a LeaseFence whose ``next_txn()`` pairs ride every
-    data commit (DeltaPartitionSwap.swap(txn=...)) → release, which
+    data commit (a fenced partition overwrite) → release, which
     raises LeaseStolenError if a contender overtook the fence
     mid-cycle. Raises ConcurrentWriterError when the lease is held —
     retry/backoff policy stays with the caller, same as
@@ -739,8 +565,8 @@ def cas_append(read_max_seq, try_commit, rows: list[dict], conflict_types, attem
     ``try_commit(stamped, claimed_seq) -> bool`` returns True only
     when the claimed rows are verifiably in the log (read-back, not
     hope). Extracted as a pure function so the retry/stamping logic
-    is tested always-on with injected losses of both kinds,
-    delta-spark installed or not. Returns the stamped rows."""
+    is tested with injected losses of both kinds. Returns the stamped
+    rows."""
     for _ in range(attempts):
         nxt = read_max_seq() + 1
         stamped = [{**r, "seq": nxt + i} for i, r in enumerate(rows)]
@@ -750,292 +576,3 @@ def cas_append(read_max_seq, try_commit, rows: list[dict], conflict_types, attem
         except conflict_types:
             pass
     raise RuntimeError("lease-log CAS append: retries exhausted under contention")
-
-
-class DeltaLeaseLog:
-    """Delta adapter for TableFormatWriterLease (import-gated like
-    DeltaEpochSink): the lease log is a tiny Delta table CREATED
-    EAGERLY. Creating the table in the constructor means ``read``
-    never has to guess whether an exception means "not created yet" —
-    a lease log must fail CLOSED (propagate transient read errors)
-    rather than report an empty log and let a second writer in.
-
-    The protocol's commit-order sequence ``_seq`` is a PERSISTED
-    ``seq`` column stamped at append time (round-9, replacing the
-    round-8 change-data-feed read). The CDF design re-read the entire
-    commit history from ``startingVersion 0`` on every judge — a scan
-    that grows with every heartbeat — and broke PERMANENTLY the
-    moment VACUUM removed change files or the delta log's retention
-    expired old commits, i.e. exactly in the long-lived deployment
-    the docstring recommended cleanup for. With ``seq`` in the row a
-    plain snapshot read suffices, so the table can be safely bounded:
-    ``prune(below_fence)`` deletes rows below the current fence
-    (judge/acquire/release only ever consult the TOP fence), after
-    which OPTIMIZE/VACUUM are genuinely safe.
-
-    ``seq`` is minted by compare-and-swap (``cas_append``): read
-    max(seq), then INSERT-IF-ABSENT the row at seq+1 via
-    ``DeltaTable.merge`` with a target-side condition pinned to the
-    claimed seq and ``whenNotMatchedInsert`` only (round-10, replacing
-    the round-9 ``replaceWhere`` overwrite). The merge shape is the
-    load-bearing choice: an append-only log must NEVER be written
-    with an operation that can delete, because the max(seq) read and
-    the write are separate transactions — a rival that commits the
-    claimed seq BEFORE the write transaction's snapshot does not
-    overlap it, Delta raises no conflict, and a ``replaceWhere
-    seq >= claimed`` overwrite would silently DELETE the rival's
-    committed acquire/heartbeat (split-brain: both contenders then
-    win their read-backs at the same fence). With merge the same
-    race is benign by construction:
-
-    - rival committed BEFORE our snapshot → its row MATCHES our
-      source row on seq, the merge inserts nothing, and the
-      post-commit read-back sees a row that is not ours →
-      ``cas_append`` retries at a fresh seq; the rival's row is
-      untouched (merge has no whenMatched clause — it CANNOT delete
-      or update anything, ever);
-    - rival commits BETWEEN our snapshot and our commit → the merge's
-      recorded read predicate (``t.seq = <claimed>``) overlaps the
-      rival's added file, Delta's optimistic conflict detection fails
-      OUR commit (ConcurrentAppendException), and ``cas_append``
-      retries.
-
-    Either way commit order and seq order agree, which is all the
-    first-commit-wins tie-break needs. Success is decided by
-    READ-BACK (the row at the claimed seq is field-identical to
-    ours), never by assuming the commit landed.
-
-    (app_id, version) idempotency is SELF-CARRIED (round-10 review):
-    every row stores its ``app_id``/``app_version``, and ``append``
-    first checks ``max(app_version) where app_id`` — the watermark
-    record IS the row, so it exists iff the commit landed, atomically.
-    The round-10 first draft rode Delta's txnAppId/txnVersion session
-    configs instead, which is wrong in BOTH directions: if a Delta
-    version ignores them for MERGE there is no idempotency at all,
-    and if it honors them a replayed append (same version, fresh
-    claimed seq) is skipped as a duplicate on every retry — the
-    read-back finds nothing and cas_append exhausts and raises on
-    what should be an idempotent no-op; worse, a matched-no-insert
-    race loss could burn the version without landing the row. Run the
-    Delta integration tests against the pinned delta-spark version
-    before relying on this adapter in a deployment (they skip where
-    the package is absent)."""
-
-    SCHEMA = (
-        "seq LONG, fence LONG, owner STRING, op STRING, kind STRING,"
-        " ts_ms LONG, lease_ms LONG, app_id STRING, app_version LONG"
-    )
-    _COLS = (
-        "seq", "fence", "owner", "op", "kind", "ts_ms", "lease_ms",
-        "app_id", "app_version",
-    )
-
-    def __init__(self, spark, table_path: str):
-        import importlib
-
-        if importlib.util.find_spec("delta") is None:  # pragma: no cover
-            raise ModuleNotFoundError("DeltaLeaseLog requires the delta-spark package")
-        from delta import exceptions as _dx
-
-        self.spark = spark
-        self.table_path = table_path
-        self._conflicts = tuple(
-            getattr(_dx, n)
-            for n in (
-                "ConcurrentAppendException",
-                "ConcurrentDeleteReadException",
-                "ConcurrentDeleteDeleteException",
-                "ConcurrentTransactionException",
-                "MetadataChangedException",
-            )
-            if hasattr(_dx, n)
-        )
-        cols = ", ".join(
-            f"{c} {t}" for c, t in (p.split(" ") for p in self.SCHEMA.split(", "))
-        )
-        spark.sql(
-            f"CREATE TABLE IF NOT EXISTS delta.`{table_path}` ({cols}) USING delta"
-        )
-        # CREATE IF NOT EXISTS silently keeps a pre-existing table's
-        # schema: a log created by the round-8 CDF-based code has no
-        # seq column (and a round-10-draft log no app_id column), and
-        # limping on would brick the first read()/append() (review
-        # findings r9/r10). Fail loudly with the migration instead.
-        live_cols = set(
-            spark.read.format("delta").load(table_path).columns
-        )
-        if "seq" not in live_cols or "app_id" not in live_cols:
-            raise RuntimeError(
-                f"lease log at {table_path} predates the current schema"
-                " (persisted 'seq' + self-carried 'app_id'/'app_version'"
-                " idempotency columns). Migrate with the holder's lease"
-                " HELD: read the old log, keep only rows at the top fence,"
-                " rewrite them under the new schema to a NEW table path,"
-                " and point every writer at it."
-            )
-
-    def read(self) -> list[dict]:
-        out = []
-        for row in self.spark.read.format("delta").load(self.table_path).collect():
-            d = row.asDict()
-            d["_seq"] = d.pop("seq")
-            out.append(d)
-        return out
-
-    def _max_seq(self) -> int:
-        from pyspark.sql import functions as F
-
-        row = (
-            self.spark.read.format("delta")
-            .load(self.table_path)
-            .agg(F.max("seq"))
-            .collect()[0]
-        )
-        return row[0] if row[0] is not None else 0
-
-    def _try_commit(self, stamped: list[dict], claimed_seq: int) -> bool:
-        """One insert-if-absent attempt at the claimed seq. True only
-        when the read-back shows OUR row at that seq (see the class
-        docstring for why merge + read-back, never a replaceWhere
-        overwrite, is the only safe shape here). No txn session
-        configs: idempotency is self-carried by the row's
-        app_id/app_version columns (class docstring)."""
-        from delta.tables import DeltaTable
-
-        row = stamped[0]
-        src = self.spark.createDataFrame(
-            [tuple(row[c] for c in self._COLS)], self.SCHEMA
-        )
-        target = DeltaTable.forPath(self.spark, self.table_path)
-        (
-            target.alias("t")
-            .merge(src.alias("s"), f"t.seq = s.seq AND t.seq = {int(claimed_seq)}")
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-        got = (
-            self.spark.read.format("delta")
-            .load(self.table_path)
-            .where(f"seq = {int(claimed_seq)}")
-            .collect()
-        )
-        if not got:
-            return False  # rival pruned/raced — claim a fresh seq
-        landed = got[0].asDict()
-        return all(landed[c] == row[c] for c in self._COLS)
-
-    def append(self, rows: list[dict], app_id: str, version: int) -> None:
-        if len(rows) != 1:
-            # The merge mints exactly one seq per transaction; a
-            # multi-row batch could land PARTIALLY when a rival holds
-            # one of the claimed seqs (merge inserts each not-matched
-            # source row independently). The lease protocol only ever
-            # appends single rows, so refuse loudly rather than risk
-            # orphan stamps.
-            raise ValueError("DeltaLeaseLog.append commits exactly one row per call")
-        from pyspark.sql import functions as F
-
-        # self-carried idempotency watermark (review round-10): the
-        # watermark record IS the committed row, so it advances exactly
-        # when the append landed — no dependence on whether a Delta
-        # version honors txn session configs for MERGE
-        wm_row = (
-            self.spark.read.format("delta")
-            .load(self.table_path)
-            .where(F.col("app_id") == app_id)
-            .agg(F.max("app_version"))
-            .collect()[0]
-        )
-        if wm_row[0] is not None and version <= wm_row[0]:
-            return  # idempotent replay: the original commit already landed
-        stamped_rows = [{**r, "app_id": app_id, "app_version": int(version)} for r in rows]
-        cas_append(
-            self._max_seq,
-            self._try_commit,
-            stamped_rows,
-            self._conflicts or (),
-        )
-
-    def prune(self, below_fence: int, attempts: int = 8) -> None:
-        """Bound the log: drop rows below ``below_fence`` (typically
-        the caller's own acquired fence — the protocol only ever
-        consults the top fence). Concurrent appends CAN conflict with
-        this delete (review finding r9): every append is a read-write
-        MERGE transaction whose seq read predicate may span the files
-        the delete rewrites, so Delta may fail one side with a
-        concurrent-delete/append exception — the appender retries via
-        cas_append, and prune retries here; the retry is safe because
-        deleting already-dead fences is idempotent."""
-        from delta.tables import DeltaTable
-
-        for i in range(attempts):
-            try:
-                DeltaTable.forPath(self.spark, self.table_path).delete(
-                    f"fence < {int(below_fence)}"
-                )
-                return
-            except self._conflicts or ():
-                if i == attempts - 1:
-                    raise
-
-
-class DeltaPartitionSwap:
-    """PROTOTYPE (import-gated): the crash-atomic partition swap
-    (protocol 3 — retention erasure, compaction, rollup rebuild) as
-    Delta commits — the third row of the mapping table.
-
-    - ``swap(df, predicate)``: ONE ``overwrite`` commit with
-      ``replaceWhere`` — the replaced partition's removal and the
-      replacement's visibility are a single snapshot transition, so
-      the two-phase .old_*/rename dance AND engine._recover_swaps'
-      roll-forward/back both disappear: an interrupted swap simply
-      never committed, and readers keep the old snapshot.
-    - ``erase(predicate)``: retention/GDPR delete
-      (lib/orestes-remover.js:16-53 semantics). The DELETE commit is
-      the LOGICAL erasure (immediately invisible to every new
-      snapshot); physical bytes persist in unreferenced files until
-      ``vacuum(retention_hours)`` — the honest GDPR contract mirrors
-      PosixCommitBackend.swap_partition's strict-removal rule: a
-      deployment with an erasure SLA must run VACUUM inside it, so
-      ``erase`` returns the vacuum obligation rather than hiding it.
-    """
-
-    def __init__(self, spark, table_path: str):
-        import importlib
-
-        if importlib.util.find_spec("delta") is None:  # pragma: no cover
-            raise ModuleNotFoundError("DeltaPartitionSwap requires the delta-spark package")
-        self.spark = spark
-        self.table_path = table_path
-
-    @staticmethod
-    def bucket_predicate(buckets: list[int], col: str = "bucket") -> str:
-        """replaceWhere/DELETE predicate for a bucket set — validated
-        integers only, so the predicate can never smuggle SQL."""
-        if not buckets:
-            raise ValueError("empty bucket list")
-        ids = ", ".join(str(int(b)) for b in sorted(set(buckets)))
-        return f"{col} IN ({ids})"
-
-    def swap(self, df, predicate: str, txn: tuple[str, int] | None = None) -> None:
-        """One replaceWhere commit. ``txn`` (round-9) is an
-        ``(app_id, version)`` pair from ``LeaseFence.next_txn()``: the
-        maintenance cycle's acquired fence rides the commit, so a
-        zombie's replayed swap is refused by the data table once a
-        higher-fence cycle has committed. A fenced ERASE is a swap of
-        the retained rows (possibly an empty DataFrame) — Delta's
-        DeltaTable.delete() API cannot carry txn options, replaceWhere
-        can."""
-        w = df.write.format("delta").mode("overwrite").option("replaceWhere", predicate)
-        if txn is not None:
-            w = w.option("txnAppId", txn[0]).option("txnVersion", txn[1])
-        w.save(self.table_path)
-
-    def erase(self, predicate: str) -> str:
-        from delta.tables import DeltaTable
-
-        DeltaTable.forPath(self.spark, self.table_path).delete(predicate)
-        return (
-            "logical erasure committed; physical removal requires "
-            "VACUUM past the table's deletedFileRetentionDuration"
-        )

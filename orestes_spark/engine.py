@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 
 from orestes_spark import esdsl, schema, validation
 from orestes_spark.commit_backend import POSIX_BACKEND as _BACKEND
+from orestes_spark.commit_backend import ConcurrentWriterError
 from orestes_spark.config import MS_IN_DAY, EngineConfig, SpaceConfig
 
 
@@ -212,10 +213,8 @@ def _require_posix_warehouse(warehouse: str) -> None:
     would silently not hold. Refuse LOUDLY instead — at that tier the
     commit log belongs to a lakehouse table format (Delta/Iceberg),
     whose transaction log does this job. The protocols are isolated
-    behind commit_backend.PosixCommitBackend and all three protocols
-    are prototyped on Delta's log (commit_backend.DeltaEpochSink /
-    TableFormatWriterLease / DeltaPartitionSwap, documented in
-    SCALING.md)."""
+    behind commit_backend.PosixCommitBackend; its module docstring
+    maps each one onto a table format's log."""
     if "://" not in warehouse:
         return
     scheme = warehouse.split("://", 1)[0]
@@ -232,9 +231,8 @@ def _require_posix_warehouse(warehouse: str) -> None:
         " the guarantees would silently not hold. Use a local/NFS path, or"
         " a lakehouse table format (Delta/Iceberg) whose transaction log"
         " owns the commit protocol at object-store scale (see"
-        " orestes_spark.commit_backend: DeltaEpochSink for epoch commits,"
-        " TableFormatWriterLease for the writer lease, DeltaPartitionSwap"
-        " for erasure/compaction swaps)."
+        " orestes_spark.commit_backend for how each protocol maps onto"
+        " one)."
     )
 
 
@@ -288,8 +286,7 @@ def _publish_compact_manifest(points_root: Path, part_name: str, tmp: Path) -> N
 # The manifest commit-log primitives live in commit_backend (the
 # round-7 lakehouse seam): engine code keeps these module names, so
 # every call site and test is unchanged while the POSIX implementation
-# is swappable/inspectable as one unit (see
-# commit_backend.PosixCommitBackend and the DeltaEpochSink prototype).
+# is inspectable as one unit (see commit_backend.PosixCommitBackend).
 _read_manifest = _BACKEND.read_manifest
 _write_manifest = _BACKEND.publish_manifest
 
@@ -434,11 +431,6 @@ def _pid_alive(pid: int) -> bool:
         return False
     except OSError:  # PermissionError (EPERM) and anything else
         return True
-
-
-class ConcurrentWriterError(RuntimeError):
-    """A second writer tried to mutate a space while another live
-    writer holds its lock (single-writer contract, enforced loudly)."""
 
 
 class RollupStaleWarning(UserWarning):

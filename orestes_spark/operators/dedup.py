@@ -1378,16 +1378,24 @@ def connected_components(
     BEFORE the probe, so when the graph turns out large the
     distributed loop reuses the probe's computed partitions instead
     of re-executing the upstream pair pipeline (the expensive case
-    paid the probe twice); and a NULL id routes to the distributed
-    path — the driver union-find's min-label resolution would raise
-    on None < int where the joins degrade defined."""
-    directed = pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    ).localCheckpoint(eager=False)
+    paid the probe twice).
+
+    A NULL id has no place in a closure: the distributed loop's joins
+    would drop its pairs silently and the driver's min-label
+    resolution cannot order it. The projection raises on it instead,
+    so either path fails at its first action."""
+
+    def _id(c):
+        return F.when(
+            F.col(c).isNull(),
+            F.raise_error(F.lit(f"connected_components: NULL id in column {c!r}")),
+        ).otherwise(F.col(c))
+
+    directed = pairs.select(_id(id_a).alias("src"), _id(id_b).alias("dst")).localCheckpoint(
+        eager=False
+    )
     probe = directed.limit(_DRIVER_CC_MAX_EDGES + 1).collect()
-    if len(probe) <= _DRIVER_CC_MAX_EDGES and not any(
-        row[0] is None or row[1] is None for row in probe
-    ):
+    if len(probe) <= _DRIVER_CC_MAX_EDGES:
         parent: dict = {}
 
         def find(x):
@@ -2164,26 +2172,6 @@ def _kgram_starts(docs: DataFrame, id_col: str, text_col: str, k: int) -> DataFr
     )
 
 
-def _span_hot_default() -> int | None:
-    """Scale knob for the span family's hot-key tier (round-13,
-    VERDICT r12 #2 / guide §2.5): k-gram hashes with at least this
-    many occurrences are counted by a partial-aggregated sketch and
-    flagged via a map-side broadcast join instead of riding the count
-    window — whose WindowExec otherwise buffers and sorts EVERY
-    occurrence of a boilerplate k-gram (a licence header in 30% of a
-    100 TB corpus) in one task. None (the local default) keeps the
-    r12 single-window plan: at bench scale the hardened path's extra
-    k-gram checkpoint + sketch pass cost more than any local skew,
-    and the driver's bench must stay comparable; production sets
-    ORESTES_SPAN_HOT_THRESHOLD to the occurrence count one task sorts
-    comfortably (~100k) — the A/B and the hot-fixture test pin that
-    both paths are row-identical."""
-    import os
-
-    v = int(os.environ.get("ORESTES_SPAN_HOT_THRESHOLD", "0") or "0")
-    return v or None
-
-
 def _span_flags(
     docs: DataFrame,
     id_col: str,
@@ -2192,7 +2180,6 @@ def _span_flags(
     min_count: int,
     max_count: int | None,
     keep_first: bool,
-    hot_threshold: int | None = None,
 ) -> DataFrame:
     """Duplicated window starts (_id, pos, _canon) for the span-dedup
     family. ``_canon`` is True only under ``keep_first`` and only on
@@ -2213,60 +2200,24 @@ def _span_flags(
     and canonical rows ride one frame so consumers that need both
     never re-derive the window.
 
-    ``hot_threshold`` (round-13, VERDICT r12 #2 / guide §2.5 —
-    defaults to ``_span_hot_default()``): the window's one weakness
-    is that EVERY occurrence of one k-gram lands in ONE WindowExec
-    task, which buffers and sorts it — unbounded for corpus-wide
-    boilerplate at 100 TB. With a threshold set, a partial-aggregated
-    sketch (map-side combine: a hot hash is ~one row per map task on
-    the wire) finds hashes with >= hot_threshold occurrences; their
-    flags attach MAP-SIDE via a broadcast join of the (tiny, by the
-    threshold's own arithmetic: <= corpus_windows/threshold rows) hot
-    table, and the window runs only on the remaining occurrences —
-    every window partition provably < hot_threshold rows. The k-gram
-    stream is lazily checkpointed so the sketch and the flags read
-    one tokenize pass. Row-identical to the plain path by
-    construction (hot/cold split on whole h-groups; same dup/canon
-    arithmetic on both legs — pinned by the hot-fixture test); the
-    local default stays None because the checkpoint + sketch pass
-    cost more than any skew sf0.1 can produce."""
-    if hot_threshold is None:
-        hot_threshold = _span_hot_default()
+    The window's one weakness is that EVERY occurrence of one k-gram
+    lands in ONE WindowExec task, which buffers and sorts it; SCALING.md
+    §2 measures why no hot-key split is used."""
     kg = _kgram_starts(docs, id_col, text_col, k)
-    dup_of = lambda c: (  # noqa: E731 - one home for the dup test
-        (c >= min_count) & (c <= max_count) if max_count is not None else c >= min_count
-    )
-    hot_flags = None
-    if hot_threshold:
-        kg = kg.localCheckpoint(eager=False)
-        aggs = [F.count(F.lit(1)).alias("_c")]
-        if keep_first:
-            aggs.append(F.min(F.struct("_id", "pos")).alias("_first"))
-        hot = (
-            kg.groupBy("h").agg(*aggs).where(F.col("_c") >= int(hot_threshold))
-        )
-        hot_occ = kg.join(F.broadcast(hot), "h").where(dup_of(F.col("_c")))
-        if keep_first:
-            hf = (F.col("_id") == F.col("_first._id")) & (
-                F.col("pos") == F.col("_first.pos")
-            )
-            hot_flags = hot_occ.select("_id", "pos", hf.alias("_canon"))
-        else:
-            hot_flags = hot_occ.select("_id", "pos", F.lit(False).alias("_canon"))
-        kg = kg.join(F.broadcast(hot.select("h")), "h", "left_anti")
+    dup = F.col("_c") >= min_count
+    if max_count is not None:
+        dup = dup & (F.col("_c") <= max_count)
     w = Window.partitionBy("h")
     cols = [F.col("_id"), F.col("pos"), F.count(F.lit(1)).over(w).alias("_c")]
     if keep_first:
         cols.append(F.min(F.struct("_id", "pos")).over(w).alias("_first"))
-    occ = kg.select(*cols).where(dup_of(F.col("_c")))
+    occ = kg.select(*cols).where(dup)
     if keep_first:
         is_first = (F.col("_id") == F.col("_first._id")) & (
             F.col("pos") == F.col("_first.pos")
         )
-        out = occ.select("_id", "pos", is_first.alias("_canon"))
-    else:
-        out = occ.select("_id", "pos", F.lit(False).alias("_canon"))
-    return out.unionByName(hot_flags) if hot_flags is not None else out
+        return occ.select("_id", "pos", is_first.alias("_canon"))
+    return occ.select("_id", "pos", F.lit(False).alias("_canon"))
 
 
 def _merge_flagged_spans(

@@ -20,6 +20,11 @@ sides so partial-aggregation order can't flip the value hash.
 
 from __future__ import annotations
 
+import functools
+import os
+import shutil
+import tempfile
+import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -1437,345 +1442,49 @@ from orestes_spark import oracles  # noqa: E402
 from orestes_spark.operators import dedup, similarity, text  # noqa: E402
 
 
-# Shared near-dup artifacts, checkpointed once per sf_dir (the same
-# materialized-intermediate pattern as _WAREHOUSES/_BAND_INDEXES):
-# FIVE registered queries consume the same MinHash-LSH pair graph and
-# two of those need its transitive closure — recomputing the
-# shingle→minhash→band pipeline and a 20-iteration CC per query would
-# charge the suite 5×/2× for one artifact. In a production pipeline
-# this is the dedup stage's output table, built once and joined by
-# every downstream consumer.
-_NEARDUP_PAIRS: dict[str, "DataFrame"] = {}
-_NEARDUP_COMPONENTS: dict[str, "DataFrame"] = {}
-_BAND_INDEXES: dict[str, str] = {}
-_SPAN_INDEXES: dict[str, str] = {}
-_SPAN_BLOOMS: dict[str, str] = {}
-_KMEANS_CELLS: dict[str, "DataFrame"] = {}
-_BIGRAM_LMS: dict[str, tuple] = {}
-_DSIR_WQS: dict[tuple, "DataFrame"] = {}
-_NB_MODELS: dict[str, "DataFrame"] = {}
-_EMB_DIMS: dict[str, int] = {}
+# ------------------------------------------------- artifact registry ---
+# Shared artifacts — pair graphs, band and k-gram indexes, trained
+# models — are built once per sf_dir and read by every consumer query,
+# the way a production pipeline's dedup stage writes one output table
+# that every downstream stage joins. Recomputing the
+# shingle→minhash→band pipeline or a 20-iteration CC per consumer
+# would charge the suite once per consumer for one artifact.
+#
+# One cache holds them all: (name, sf_dir) → (session, value). An entry
+# is valid only for the SparkSession that built it, whatever the value
+# is (checkpointed DataFrame, parquet path, scalar, engine). A path
+# value is ``<fresh temp dir>/<leaf>``; dropping the entry removes that
+# temp dir.
+_ARTIFACTS: dict[tuple[str, str], tuple[SparkSession, object]] = {}
+_TIMED: dict[str, Callable] = {}
 
 
-def _emb_dims_for(spark, sf_dir) -> int:
-    """Vector width of the embeddings table, probed once per process
-    per sf_dir (round 12): the LSH-family operators each ran a
-    one-row .first() job per CALL just to size the plane table — a
-    scalar that cannot change between calls over the same input."""
-    dims = _EMB_DIMS.get(sf_dir)
-    if dims is None:
-        e = load_table(spark, sf_dir, "embeddings")
-        dims = len(e.select("embedding").first()[0])
-        _EMB_DIMS[sf_dir] = dims
-    return dims
+def artifact(name: str, timed: bool = True):
+    """Cache ``build(spark, sf_dir)`` in the registry under ``name``.
+    Timed artifacts (the default) must be keys of ARTIFACT_CONSUMERS:
+    build_shared_artifacts drops, rebuilds and times them. Memo
+    entries (``timed=False``) — cheap scalars, driver-side Column
+    trees and the engine warehouses — are cached the same way but
+    never dropped or timed."""
+
+    def deco(build: Callable) -> Callable:
+        @functools.wraps(build)
+        def cached(spark, sf_dir):
+            hit = _ARTIFACTS.get((name, sf_dir))
+            if hit is None or hit[0] is not spark:
+                hit = _ARTIFACTS[(name, sf_dir)] = (spark, build(spark, sf_dir))
+            return hit[1]
+
+        if timed:
+            _TIMED[name] = cached
+        return cached
+
+    return deco
 
 
-def _dsir_wq_for(spark, sf_dir, bigrams: bool = False):
-    """Train (once per process per sf_dir per feature set) the DSIR
-    codebook — sampling.dsir_weight_table over the module's standard
-    target/raw split — and checkpoint it: the persisted-codebook shape
-    (CCNet/DSIR ship trained importance tables; consumers read, never
-    recount). doc_dsir_weights, doc_dsir_sample (unigram) and
-    doc_dsir_bigram (bigram) score against these artifacts; the
-    streaming gate keeps its own store-frozen copy."""
-    key = (sf_dir, bigrams)
-    w = _DSIR_WQS.get(key)
-    if w is None or w.sparkSession is not spark:
-        from orestes_spark.operators import sampling
-
-        d = load_table(spark, sf_dir, "documents")
-        # round-12: BOTH codebooks from one tokenize pass per side
-        # (sampling.dsir_weight_tables — counts byte-identical to two
-        # dsir_weight_table calls); 4 token-count jobs → 2.
-        uni, bi = sampling.dsir_weight_tables(
-            d.where(F.col("doc_id") % 20 == 0),
-            d.where(F.col("doc_id") % 20 != 0),
-            "doc_id",
-            "text",
-        )
-        _DSIR_WQS[(sf_dir, False)] = uni.localCheckpoint(eager=True)
-        _DSIR_WQS[(sf_dir, True)] = bi.localCheckpoint(eager=True)
-        w = _DSIR_WQS[key]
-    return w
-
-
-def _nb_model_for(spark, sf_dir):
-    """Train (once per process per sf_dir) the NB quality-classifier
-    artifact on the doc_id % 3 labeled seed and checkpoint it —
-    doc_quality_model and doc_quality_report both score against it
-    instead of retraining the identical deterministic model inline
-    (the kmeans_cells/bigram_lm precedent)."""
-    m = _NB_MODELS.get(sf_dir)
-    if m is None or m.sparkSession is not spark:
-        from orestes_spark.operators import text as _t
-
-        d = load_table(spark, sf_dir, "documents")
-        labels = d.where(F.col("doc_id") % 3 == 0).select(
-            "doc_id", (F.col("lang") == "en").alias("label")
-        )
-        m = _t.train_quality_model(d, labels, "doc_id", "text").localCheckpoint(
-            eager=True
-        )
-        _NB_MODELS[sf_dir] = m
-    return m
-
-
-_NB_METAS: dict[str, tuple] = {}
-
-
-def _nb_meta_for(spark, sf_dir) -> tuple:
-    """(nb, pq, bg, salt) of the shared NB artifact, collected once
-    per process (round 12): the self-describing columns are constant
-    over the checkpointed model, so re-collecting them per scoring
-    call was a pure extra job."""
-    meta = _NB_METAS.get(sf_dir)
-    if meta is None:
-        rows = _nb_model_for(spark, sf_dir).select("nb", "pq", "bg", "salt").distinct().collect()
-        if len(rows) != 1:
-            raise ValueError(
-                f"model frame mixes {len(rows)} featurization configs"
-                " (distinct nb/pq/bg/salt rows) — pass exactly one trained model"
-            )
-        meta = (rows[0]["nb"], rows[0]["pq"], rows[0]["bg"], rows[0]["salt"])
-        _NB_METAS[sf_dir] = meta
-    return meta
-
-
-def _bigram_lm_for(spark, sf_dir):
-    """Train (once per process per sf_dir) the reference bigram LM on
-    the doc_id % 20 == 0 slice and checkpoint its codebook frames —
-    the persisted-LM shape (CCNet ships trained KenLM files; consumers
-    read, never retrain). doc_lm_perplexity and doc_ccnet_buckets both
-    score against this artifact; training is deterministic, so the
-    shared checkpoint is byte-identical to an inline retrain."""
-    m = _BIGRAM_LMS.get(sf_dir)
-    if m is None or m[1].sparkSession is not spark:
-        from orestes_spark.operators.text import train_bigram_lm
-
-        d = load_table(spark, sf_dir, "documents")
-        vocab, pairs_df, fb_df = train_bigram_lm(
-            d.where(F.col("doc_id") % 20 == 0), "doc_id", "text", vocab_size=256
-        )
-        m = (
-            vocab,
-            pairs_df.localCheckpoint(eager=True),
-            fb_df.localCheckpoint(eager=True),
-        )
-        _BIGRAM_LMS[sf_dir] = m
-    return m
-
-
-def _neardup_pairs_for(spark, sf_dir):
-    p = _NEARDUP_PAIRS.get(sf_dir)
-    if p is None or p.sparkSession is not spark:
-        d = load_table(spark, sf_dir, "documents")
-        p = dedup.minhash_lsh_dedup(d, "doc_id", "text").localCheckpoint(eager=True)
-        _NEARDUP_PAIRS[sf_dir] = p
-    return p
-
-
-def _components_for(spark, sf_dir):
-    c = _NEARDUP_COMPONENTS.get(sf_dir)
-    if c is None or c.sparkSession is not spark:
-        c = dedup.connected_components(
-            _neardup_pairs_for(spark, sf_dir)
-        ).localCheckpoint(eager=True)
-        _NEARDUP_COMPONENTS[sf_dir] = c
-    return c
-
-
-def _band_index_for(spark, sf_dir) -> str:
-    """Build (once per process per sf_dir) and return the parquet path
-    of the corpus LSH band index used by doc_incremental_neardup."""
-    import tempfile
-
-    path = _BAND_INDEXES.get(sf_dir)
-    if path is None:
-        d = load_table(spark, sf_dir, "documents")
-        corpus = d.where(F.col("doc_id") % 5 != 0)
-        path = tempfile.mkdtemp(prefix="orestes_lsh_idx_") + "/bands"
-        # Round-13: bucketized + partitionBy("hb") (the span index's
-        # round-9 treatment) — incremental_neardup detects the
-        # self-described nb and partition-prunes its candidate scan to
-        # the batch's touched buckets.
-        dedup.minhash_band_index(
-            corpus, "doc_id", "text", buckets=_SPAN_BUCKETS
-        ).repartition(F.col("hb")).write.partitionBy("hb").parquet(path)
-        _BAND_INDEXES[sf_dir] = path
-    return path
-
-
-_SPAN_BUCKETS = 16  # hash-range buckets of the persisted span index
-
-
-def _span_index_for(spark, sf_dir) -> str:
-    """Build (once per process per sf_dir) and return the parquet path
-    of the corpus distinct-k-gram span index used by
-    doc_incremental_span — the persisted artifact a per-ingest
-    deployment builds once, mirroring _band_index_for. Round-9: the
-    index is written partitioned by its hash-range bucket ``hb`` so
-    the per-batch probe partition-prunes the scan to the buckets the
-    batch touches (dedup.span_index's ``buckets``)."""
-    import tempfile
-
-    path = _SPAN_INDEXES.get(sf_dir)
-    if path is None:
-        d = load_table(spark, sf_dir, "documents")
-        corpus = d.where(F.col("doc_id") % 5 != 0)
-        path = tempfile.mkdtemp(prefix="orestes_span_idx_") + "/kgrams"
-        dedup.span_index(
-            corpus, "doc_id", "text", k=8, buckets=_SPAN_BUCKETS
-        ).repartition(F.col("hb")).write.partitionBy("hb").parquet(path)
-        _SPAN_INDEXES[sf_dir] = path
-    return path
-
-
-def _span_bloom_for(spark, sf_dir) -> str:
-    """Build (once per process per sf_dir) the Bloom sidecar over the
-    persisted span index (dedup.span_bloom, round-10) — the second
-    tier of probe pruning: bucket pruning bounds I/O to touched
-    partitions, the sidecar skips the touched partitions that hold no
-    Bloom-passing batch hash. Sized at 2^17 bits/bucket (~16 KiB —
-    generous for the sf0.1 per-bucket distinct-hash counts)."""
-    import tempfile
-
-    path = _SPAN_BLOOMS.get(sf_dir)
-    if path is None:
-        idx = spark.read.parquet(_span_index_for(spark, sf_dir))
-        path = tempfile.mkdtemp(prefix="orestes_span_bloom_") + "/bloom"
-        dedup.span_bloom(idx, bits=1 << 17, hashes=4).write.parquet(path)
-        _SPAN_BLOOMS[sf_dir] = path
-    return path
-
-
-def _kmeans_cells_for(spark, sf_dir):
-    """Train (once per process per sf_dir) the coarse quantizer's cell
-    assignment — kmeans_cosine(k=8, iters=2, quantize=1000) — and
-    checkpoint it. Round-8 verdict #2: emb_kmeans_assign,
-    emb_ivf_trained, and emb_ivf_recall each retrained the IDENTICAL
-    deterministic model inline, three trainings per bench pass for one
-    artifact; in production the trained cells ARE a persisted index
-    component, built once and read by every IVF consumer. Training is
-    integer-deterministic, so the shared checkpoint is byte-identical
-    to the inline result."""
-    a = _KMEANS_CELLS.get(sf_dir)
-    if a is None or a.sparkSession is not spark:
-        e = load_table(spark, sf_dir, "embeddings")
-        a = similarity.kmeans_cosine(
-            e, k=8, iters=2, quantize=1000
-        ).localCheckpoint(eager=True)
-        _KMEANS_CELLS[sf_dir] = a
-    return a
-
-
-def build_shared_artifacts(spark, sf_dir, invalidate: bool = True) -> dict[str, float]:
-    """Timed rebuild of the process-cached shared intermediates (the
-    near-dup pair graph, its connected components, the persisted LSH
-    band index). The bench charges these as explicit ``artifact:*``
-    lines so queries that consume a warm checkpoint don't silently
-    report only the read cost (round-6 verdict: ~7-9 s of real work
-    had moved into the untimed warmup pass). Returns name → seconds.
-
-    ``invalidate`` drops the process caches first so the build really
-    runs; consumers after this call read the fresh checkpoint — the
-    production shape, where the dedup stage's output table is built
-    once and joined by every downstream consumer."""
-    import os
-    import shutil
-    import time as _time
-
-    if invalidate:
-        _NEARDUP_PAIRS.pop(sf_dir, None)
-        _NEARDUP_COMPONENTS.pop(sf_dir, None)
-        old = _BAND_INDEXES.pop(sf_dir, None)
-        if old:
-            shutil.rmtree(os.path.dirname(old), ignore_errors=True)
-        old = _SPAN_INDEXES.pop(sf_dir, None)
-        if old:
-            shutil.rmtree(os.path.dirname(old), ignore_errors=True)
-        old = _SPAN_BLOOMS.pop(sf_dir, None)
-        if old:
-            shutil.rmtree(os.path.dirname(old), ignore_errors=True)
-        old = _CONTAINMENT_INDEXES.pop(sf_dir, None)
-        if old:
-            shutil.rmtree(os.path.dirname(old), ignore_errors=True)
-        old = _WINNOW_INDEXES.pop(sf_dir, None)
-        if old:
-            shutil.rmtree(os.path.dirname(old), ignore_errors=True)
-        old = _PHASH_INDEXES.pop(sf_dir, None)
-        if old:
-            shutil.rmtree(os.path.dirname(old), ignore_errors=True)
-        old = _VIDEO_SIG_INDEXES.pop(sf_dir, None)
-        if old:
-            shutil.rmtree(os.path.dirname(old), ignore_errors=True)
-        old = _AUDIO_ENV_INDEXES.pop(sf_dir, None)
-        if old:
-            shutil.rmtree(os.path.dirname(old), ignore_errors=True)
-        old = _SEM_INDEXES.pop(sf_dir, None)
-        if old:
-            shutil.rmtree(old, ignore_errors=True)
-        _KMEANS_CELLS.pop(sf_dir, None)
-        _BIGRAM_LMS.pop(sf_dir, None)
-        _DSIR_WQS.pop((sf_dir, False), None)
-        _DSIR_WQS.pop((sf_dir, True), None)
-        _NB_MODELS.pop(sf_dir, None)
-        _CROSS_MODAL_MATCHES.pop(sf_dir, None)
-    out: dict[str, float] = {}
-    t0 = _time.perf_counter()
-    _neardup_pairs_for(spark, sf_dir)
-    out["neardup_pair_graph"] = round(_time.perf_counter() - t0, 3)
-    t0 = _time.perf_counter()
-    _components_for(spark, sf_dir)
-    out["neardup_components"] = round(_time.perf_counter() - t0, 3)
-    t0 = _time.perf_counter()
-    _band_index_for(spark, sf_dir)
-    out["lsh_band_index"] = round(_time.perf_counter() - t0, 3)
-    t0 = _time.perf_counter()
-    _span_index_for(spark, sf_dir)
-    out["span_kgram_index"] = round(_time.perf_counter() - t0, 3)
-    t0 = _time.perf_counter()
-    _span_bloom_for(spark, sf_dir)
-    out["span_bloom_sidecar"] = round(_time.perf_counter() - t0, 3)
-    t0 = _time.perf_counter()
-    _containment_index_for(spark, sf_dir)
-    out["containment_kgram_index"] = round(_time.perf_counter() - t0, 3)
-    t0 = _time.perf_counter()
-    _winnow_index_for(spark, sf_dir)
-    out["winnow_print_index"] = round(_time.perf_counter() - t0, 3)
-    t0 = _time.perf_counter()
-    _phash_index_for(spark, sf_dir)
-    out["phash_band_index"] = round(_time.perf_counter() - t0, 3)
-    t0 = _time.perf_counter()
-    _video_sig_index_for(spark, sf_dir)
-    out["video_unit_index"] = round(_time.perf_counter() - t0, 3)
-    t0 = _time.perf_counter()
-    _audio_env_index_for(spark, sf_dir)
-    out["audio_unit_index"] = round(_time.perf_counter() - t0, 3)
-    t0 = _time.perf_counter()
-    _sem_index_for(spark, sf_dir)
-    out["semantic_index"] = round(_time.perf_counter() - t0, 3)
-    t0 = _time.perf_counter()
-    _kmeans_cells_for(spark, sf_dir)
-    out["kmeans_cells"] = round(_time.perf_counter() - t0, 3)
-    t0 = _time.perf_counter()
-    _bigram_lm_for(spark, sf_dir)
-    out["bigram_lm"] = round(_time.perf_counter() - t0, 3)
-    t0 = _time.perf_counter()
-    _dsir_wq_for(spark, sf_dir, bigrams=False)
-    _dsir_wq_for(spark, sf_dir, bigrams=True)
-    out["dsir_codebooks"] = round(_time.perf_counter() - t0, 3)
-    t0 = _time.perf_counter()
-    _nb_model_for(spark, sf_dir)
-    out["nb_quality_model"] = round(_time.perf_counter() - t0, 3)
-    t0 = _time.perf_counter()
-    _cross_modal_matches_for(spark, sf_dir)
-    out["cross_modal_matches"] = round(_time.perf_counter() - t0, 3)
-    return out
-
-
-# queries whose measured latency reads a checkpoint built by
-# build_shared_artifacts (recorded in bench_queries.json so suite
-# totals stay interpretable round over round)
+# The timed artifacts, in build order, and the queries whose measured
+# latency reads each one (recorded in bench_queries.json so suite
+# totals stay interpretable round over round).
 ARTIFACT_CONSUMERS = {
     "neardup_pair_graph": [
         "doc_minhash_neardup",
@@ -1805,6 +1514,195 @@ ARTIFACT_CONSUMERS = {
     ],
     "cross_modal_matches": ["multimodal_pair_matches", "multimodal_pair_dedup"],
 }
+
+
+def build_shared_artifacts(spark, sf_dir, invalidate: bool = True) -> dict[str, float]:
+    """Timed build of every ARTIFACT_CONSUMERS artifact, in that
+    order. The bench charges these as explicit ``artifact:*`` lines so
+    queries that consume a warm checkpoint don't silently report only
+    the read cost (round-6 verdict: ~7-9 s of real work had moved into
+    the untimed warmup pass). Returns name → seconds.
+
+    ``invalidate`` drops the timed entries (and their temp dirs) first
+    so the build really runs; consumers after this call read the fresh
+    artifacts."""
+    if invalidate:
+        for name in ARTIFACT_CONSUMERS:
+            hit = _ARTIFACTS.pop((name, sf_dir), None)
+            if hit is not None and isinstance(hit[1], str):
+                shutil.rmtree(os.path.dirname(hit[1]), ignore_errors=True)
+    out: dict[str, float] = {}
+    for name in ARTIFACT_CONSUMERS:
+        t0 = time.perf_counter()
+        _TIMED[name](spark, sf_dir)
+        out[name] = round(time.perf_counter() - t0, 3)
+    return out
+
+
+@artifact("emb_dims", timed=False)
+def _emb_dims_for(spark, sf_dir) -> int:
+    """Vector width of the embeddings table, probed once per sf_dir
+    (round 12): the LSH-family operators each ran a one-row .first()
+    job per CALL just to size the plane table — a scalar that cannot
+    change between calls over the same input."""
+    e = load_table(spark, sf_dir, "embeddings")
+    return len(e.select("embedding").first()[0])
+
+
+@artifact("dsir_codebooks")
+def _dsir_codebooks(spark, sf_dir):
+    """Train the (unigram, bigram) DSIR codebooks —
+    sampling.dsir_weight_tables over the module's standard target/raw
+    split — and checkpoint them: the persisted-codebook shape
+    (CCNet/DSIR ship trained importance tables; consumers read, never
+    recount). doc_dsir_weights, doc_dsir_sample (unigram) and
+    doc_dsir_bigram (bigram) score against these artifacts; the
+    streaming gate keeps its own store-frozen copy."""
+    from orestes_spark.operators import sampling
+
+    d = load_table(spark, sf_dir, "documents")
+    # round-12: BOTH codebooks from one tokenize pass per side
+    # (sampling.dsir_weight_tables — counts byte-identical to two
+    # dsir_weight_table calls); 4 token-count jobs → 2.
+    uni, bi = sampling.dsir_weight_tables(
+        d.where(F.col("doc_id") % 20 == 0),
+        d.where(F.col("doc_id") % 20 != 0),
+        "doc_id",
+        "text",
+    )
+    return uni.localCheckpoint(eager=True), bi.localCheckpoint(eager=True)
+
+
+@artifact("nb_quality_model")
+def _nb_model_for(spark, sf_dir):
+    """Train the NB quality-classifier artifact on the doc_id % 3
+    labeled seed and checkpoint it — doc_quality_model and
+    doc_quality_report both score against it instead of retraining the
+    identical deterministic model inline (the kmeans_cells/bigram_lm
+    precedent)."""
+    from orestes_spark.operators import text as _t
+
+    d = load_table(spark, sf_dir, "documents")
+    labels = d.where(F.col("doc_id") % 3 == 0).select(
+        "doc_id", (F.col("lang") == "en").alias("label")
+    )
+    return _t.train_quality_model(d, labels, "doc_id", "text").localCheckpoint(eager=True)
+
+
+@artifact("nb_quality_meta", timed=False)
+def _nb_meta_for(spark, sf_dir) -> tuple:
+    """(nb, pq, bg, salt) of the shared NB artifact, collected once
+    (round 12): the self-describing columns are constant over the
+    checkpointed model, so re-collecting them per scoring call was a
+    pure extra job."""
+    rows = _nb_model_for(spark, sf_dir).select("nb", "pq", "bg", "salt").distinct().collect()
+    if len(rows) != 1:
+        raise ValueError(
+            f"model frame mixes {len(rows)} featurization configs"
+            " (distinct nb/pq/bg/salt rows) — pass exactly one trained model"
+        )
+    return (rows[0]["nb"], rows[0]["pq"], rows[0]["bg"], rows[0]["salt"])
+
+
+@artifact("bigram_lm")
+def _bigram_lm_for(spark, sf_dir):
+    """Train the reference bigram LM on the doc_id % 20 == 0 slice and
+    checkpoint its codebook frames — the persisted-LM shape (CCNet
+    ships trained KenLM files; consumers read, never retrain).
+    doc_lm_perplexity and doc_ccnet_buckets both score against this
+    artifact; training is deterministic, so the shared checkpoint is
+    byte-identical to an inline retrain."""
+    from orestes_spark.operators.text import train_bigram_lm
+
+    d = load_table(spark, sf_dir, "documents")
+    vocab, pairs_df, fb_df = train_bigram_lm(
+        d.where(F.col("doc_id") % 20 == 0), "doc_id", "text", vocab_size=256
+    )
+    return (
+        vocab,
+        pairs_df.localCheckpoint(eager=True),
+        fb_df.localCheckpoint(eager=True),
+    )
+
+
+@artifact("neardup_pair_graph")
+def _neardup_pairs_for(spark, sf_dir):
+    d = load_table(spark, sf_dir, "documents")
+    return dedup.minhash_lsh_dedup(d, "doc_id", "text").localCheckpoint(eager=True)
+
+
+@artifact("neardup_components")
+def _components_for(spark, sf_dir):
+    return dedup.connected_components(_neardup_pairs_for(spark, sf_dir)).localCheckpoint(
+        eager=True
+    )
+
+
+@artifact("lsh_band_index")
+def _band_index_for(spark, sf_dir) -> str:
+    """Build the corpus LSH band index used by doc_incremental_neardup
+    and return its parquet path."""
+    d = load_table(spark, sf_dir, "documents")
+    corpus = d.where(F.col("doc_id") % 5 != 0)
+    path = tempfile.mkdtemp(prefix="orestes_lsh_idx_") + "/bands"
+    # Round-13: bucketized + partitionBy("hb") (the span index's
+    # round-9 treatment) — incremental_neardup detects the
+    # self-described nb and partition-prunes its candidate scan to
+    # the batch's touched buckets.
+    dedup.minhash_band_index(
+        corpus, "doc_id", "text", buckets=_SPAN_BUCKETS
+    ).repartition(F.col("hb")).write.partitionBy("hb").parquet(path)
+    return path
+
+
+_SPAN_BUCKETS = 16  # hash-range buckets of the persisted span index
+
+
+@artifact("span_kgram_index")
+def _span_index_for(spark, sf_dir) -> str:
+    """Build the corpus distinct-k-gram span index used by
+    doc_incremental_span and return its parquet path — the persisted
+    artifact a per-ingest deployment builds once, mirroring
+    _band_index_for. Round-9: the index is written partitioned by its
+    hash-range bucket ``hb`` so the per-batch probe partition-prunes
+    the scan to the buckets the batch touches (dedup.span_index's
+    ``buckets``)."""
+    d = load_table(spark, sf_dir, "documents")
+    corpus = d.where(F.col("doc_id") % 5 != 0)
+    path = tempfile.mkdtemp(prefix="orestes_span_idx_") + "/kgrams"
+    dedup.span_index(
+        corpus, "doc_id", "text", k=8, buckets=_SPAN_BUCKETS
+    ).repartition(F.col("hb")).write.partitionBy("hb").parquet(path)
+    return path
+
+
+@artifact("span_bloom_sidecar")
+def _span_bloom_for(spark, sf_dir) -> str:
+    """Build the Bloom sidecar over the persisted span index
+    (dedup.span_bloom, round-10) — the second tier of probe pruning:
+    bucket pruning bounds I/O to touched partitions, the sidecar skips
+    the touched partitions that hold no Bloom-passing batch hash.
+    Sized at 2^17 bits/bucket (~16 KiB — generous for the sf0.1
+    per-bucket distinct-hash counts)."""
+    idx = spark.read.parquet(_span_index_for(spark, sf_dir))
+    path = tempfile.mkdtemp(prefix="orestes_span_bloom_") + "/bloom"
+    dedup.span_bloom(idx, bits=1 << 17, hashes=4).write.parquet(path)
+    return path
+
+
+@artifact("kmeans_cells")
+def _kmeans_cells_for(spark, sf_dir):
+    """Train the coarse quantizer's cell assignment —
+    kmeans_cosine(k=8, iters=2, quantize=1000) — and checkpoint it.
+    Round-8 verdict #2: emb_kmeans_assign, emb_ivf_trained, and
+    emb_ivf_recall each retrained the IDENTICAL deterministic model
+    inline, three trainings per bench pass for one artifact; in
+    production the trained cells ARE a persisted index component,
+    built once and read by every IVF consumer. Training is
+    integer-deterministic, so the shared checkpoint is byte-identical
+    to the inline result."""
+    e = load_table(spark, sf_dir, "embeddings")
+    return similarity.kmeans_cosine(e, k=8, iters=2, quantize=1000).localCheckpoint(eager=True)
 
 
 @register("doc_minhash_neardup", oracles.minhash_neardup_sql())
@@ -2669,29 +2567,21 @@ def multimodal_video_pairs(spark, sf_dir):
     return multimodal.video_near_pairs(frames, min_frames=2)
 
 
-_PHASH_INDEXES: dict[str, str] = {}
-
-
+@artifact("phash_band_index")
 def _phash_index_for(spark, sf_dir) -> str:
-    """Build (once per process per sf_dir) the banded dHash signature
-    index of EVERY base image (dedup.simhash_band_index over the
-    fused fixture kernel) and write it to parquet — the persisted
-    perceptual-dedup artifact an image-ingest deployment maintains,
-    mirroring _band_index_for."""
-    import tempfile
-
-    path = _PHASH_INDEXES.get(sf_dir)
-    if path is None:
-        d = load_table(spark, sf_dir, "documents")
-        sig = multimodal.synth_ppm_dhash(d, "doc_id", "text")
-        path = tempfile.mkdtemp(prefix="orestes_phash_idx_") + "/bands"
-        # Round-13 (VERDICT r12 #1): hb-bucketized + partitionBy so the
-        # per-batch probe partition-prunes instead of scanning the full
-        # signature index.
-        dedup.simhash_band_index(
-            sig, bits=64, band_bits=16, buckets=_SPAN_BUCKETS
-        ).repartition(F.col("hb")).write.partitionBy("hb").parquet(path)
-        _PHASH_INDEXES[sf_dir] = path
+    """Build the banded dHash signature index of EVERY base image
+    (dedup.simhash_band_index over the fused fixture kernel) and write
+    it to parquet — the persisted perceptual-dedup artifact an
+    image-ingest deployment maintains, mirroring _band_index_for."""
+    d = load_table(spark, sf_dir, "documents")
+    sig = multimodal.synth_ppm_dhash(d, "doc_id", "text")
+    path = tempfile.mkdtemp(prefix="orestes_phash_idx_") + "/bands"
+    # Round-13 (VERDICT r12 #1): hb-bucketized + partitionBy so the
+    # per-batch probe partition-prunes instead of scanning the full
+    # signature index.
+    dedup.simhash_band_index(
+        sig, bits=64, band_bits=16, buckets=_SPAN_BUCKETS
+    ).repartition(F.col("hb")).write.partitionBy("hb").parquet(path)
     return path
 
 
@@ -2736,47 +2626,34 @@ def multimodal_audio_pairs(spark, sf_dir):
     return multimodal.audio_near_pairs(env, min_windows=2)
 
 
-_VIDEO_SIG_INDEXES: dict[str, str] = {}
-_AUDIO_ENV_INDEXES: dict[str, str] = {}
-
-
+@artifact("video_unit_index")
 def _video_sig_index_for(spark, sf_dir) -> str:
-    """Build (once per process per sf_dir) the persisted per-frame
-    dHash unit index of EVERY base video container (the aligned-unit
-    artifact a video-ingest deployment maintains — round-12, VERDICT
-    r11 #1) and write it to parquet, mirroring _phash_index_for."""
-    import tempfile
-
-    path = _VIDEO_SIG_INDEXES.get(sf_dir)
-    if path is None:
-        d = load_table(spark, sf_dir, "documents")
-        units = multimodal.synth_video_frame_dhash(d, "doc_id", "text")
-        path = tempfile.mkdtemp(prefix="orestes_video_idx_") + "/units"
-        # Round-13 (VERDICT r12 #1): unit-bucketized + partitionBy so
-        # the per-batch probe partition-prunes its index scan.
-        multimodal.unit_bucketize(
-            units, "frame_idx", "simhash", _SPAN_BUCKETS
-        ).repartition(F.col("hb")).write.partitionBy("hb").parquet(path)
-        _VIDEO_SIG_INDEXES[sf_dir] = path
+    """Build the persisted per-frame dHash unit index of EVERY base
+    video container (the aligned-unit artifact a video-ingest
+    deployment maintains — round-12, VERDICT r11 #1) and write it to
+    parquet, mirroring _phash_index_for."""
+    d = load_table(spark, sf_dir, "documents")
+    units = multimodal.synth_video_frame_dhash(d, "doc_id", "text")
+    path = tempfile.mkdtemp(prefix="orestes_video_idx_") + "/units"
+    # Round-13 (VERDICT r12 #1): unit-bucketized + partitionBy so
+    # the per-batch probe partition-prunes its index scan.
+    multimodal.unit_bucketize(
+        units, "frame_idx", "simhash", _SPAN_BUCKETS
+    ).repartition(F.col("hb")).write.partitionBy("hb").parquet(path)
     return path
 
 
+@artifact("audio_unit_index")
 def _audio_env_index_for(spark, sf_dir) -> str:
-    """Build (once per process per sf_dir) the persisted envelope unit
-    index of EVERY base audio render — the audio twin of
-    _video_sig_index_for."""
-    import tempfile
-
-    path = _AUDIO_ENV_INDEXES.get(sf_dir)
-    if path is None:
-        d = load_table(spark, sf_dir, "documents")
-        units = multimodal.synth_wav_envelope(d, "doc_id", "text", half_salt="h1")
-        path = tempfile.mkdtemp(prefix="orestes_audio_idx_") + "/units"
-        # Round-13: the video index's bucket treatment, (win_idx, rms).
-        multimodal.unit_bucketize(
-            units, "win_idx", "rms", _SPAN_BUCKETS
-        ).repartition(F.col("hb")).write.partitionBy("hb").parquet(path)
-        _AUDIO_ENV_INDEXES[sf_dir] = path
+    """Build the persisted envelope unit index of EVERY base audio
+    render — the audio twin of _video_sig_index_for."""
+    d = load_table(spark, sf_dir, "documents")
+    units = multimodal.synth_wav_envelope(d, "doc_id", "text", half_salt="h1")
+    path = tempfile.mkdtemp(prefix="orestes_audio_idx_") + "/units"
+    # Round-13: the video index's bucket treatment, (win_idx, rms).
+    multimodal.unit_bucketize(
+        units, "win_idx", "rms", _SPAN_BUCKETS
+    ).repartition(F.col("hb")).write.partitionBy("hb").parquet(path)
     return path
 
 
@@ -2869,26 +2746,20 @@ def _cross_modal_captions(d):
     )
 
 
-_CROSS_MODAL_MATCHES: dict[str, DataFrame] = {}
-
-
+@artifact("cross_modal_matches")
 def _cross_modal_matches_for(spark, sf_dir):
-    """Build (once per process per sf_dir) the cross-modal joint match
-    graph — synth+decode+dHash kernel, both banded candidate stages,
-    both exact verifies — and checkpoint it: the report query AND the
-    keep-list consume the same frame (bench charges the build as
-    artifact:cross_modal_matches; previously each query re-ran the
-    full chain, doubling ~5 s of kernel work at sf0.1)."""
-    m = _CROSS_MODAL_MATCHES.get(sf_dir)
-    if m is None or m.sparkSession is not spark:
-        d = load_table(spark, sf_dir, "documents")
-        sig = multimodal.synth_ppm_pair_dhash(d, "doc_id", "text")
-        captions = _cross_modal_captions(d)
-        m = multimodal.cross_modal_pair_matches(
-            sig, captions, "rid", "caption"
-        ).localCheckpoint(eager=True)
-        _CROSS_MODAL_MATCHES[sf_dir] = m
-    return m
+    """Build the cross-modal joint match graph — synth+decode+dHash
+    kernel, both banded candidate stages, both exact verifies — and
+    checkpoint it: the report query AND the keep-list consume the same
+    frame (bench charges the build as artifact:cross_modal_matches;
+    previously each query re-ran the full chain, doubling ~5 s of
+    kernel work at sf0.1)."""
+    d = load_table(spark, sf_dir, "documents")
+    sig = multimodal.synth_ppm_pair_dhash(d, "doc_id", "text")
+    captions = _cross_modal_captions(d)
+    return multimodal.cross_modal_pair_matches(
+        sig, captions, "rid", "caption"
+    ).localCheckpoint(eager=True)
 
 
 @register("multimodal_pair_matches", oracles.cross_modal_pair_sql())
@@ -2956,34 +2827,27 @@ def multimodal_features(spark, sf_dir):
 
 # ------------------------------------------------------ engine path ---
 
-import tempfile  # noqa: E402
-
+from orestes_spark.config import SpaceConfig  # noqa: E402
 from orestes_spark.engine import OrestesEngine  # noqa: E402
 from orestes_spark.sources.testdata import events_as_points  # noqa: E402
 
-_WAREHOUSES: dict[str, OrestesEngine] = {}
 
-
+@artifact("warehouse", timed=False)
 def _engine_for(spark, sf_dir: str) -> OrestesEngine:
     """Materialize the events table into a real engine warehouse once
-    per process — so the oracle gate exercises the actual storage
-    layout (bucket partitions, series metadata, semi-join read path),
-    not just expression translation."""
-    eng = _WAREHOUSES.get(sf_dir)
-    if eng is None:
-        from orestes_spark.config import SpaceConfig
-
-        # rollup-enabled default space (with histogram partials): the
-        # continuous aggregate is maintained during the same append the
-        # other engine queries share; os_engine_rollup reads the moment
-        # partials back and os_engine_quantile the histogram partials.
-        eng = OrestesEngine(
-            spark,
-            tempfile.mkdtemp(prefix="orestes_wh_"),
-            spaces={"default": SpaceConfig(1, rollup_step_ms=_HOUR, rollup_hist=(25.0, 20))},
-        )
-        eng._append(events_as_points(spark, sf_dir), "default")
-        _WAREHOUSES[sf_dir] = eng
+    — so the oracle gate exercises the actual storage layout (bucket
+    partitions, series metadata, semi-join read path), not just
+    expression translation."""
+    # rollup-enabled default space (with histogram partials): the
+    # continuous aggregate is maintained during the same append the
+    # other engine queries share; os_engine_rollup reads the moment
+    # partials back and os_engine_quantile the histogram partials.
+    eng = OrestesEngine(
+        spark,
+        tempfile.mkdtemp(prefix="orestes_wh_"),
+        spaces={"default": SpaceConfig(1, rollup_step_ms=_HOUR, rollup_hist=(25.0, 20))},
+    )
+    eng._append(events_as_points(spark, sf_dir), "default")
     return eng
 
 
@@ -3131,31 +2995,26 @@ def os_engine_quantile(spark, sf_dir):
     )
 
 
+@artifact("upsert_warehouse", timed=False)
 def _upsert_engine_for(spark, sf_dir: str) -> OrestesEngine:
     """A warehouse that has seen a CROSS-DELIVERY OVERWRITE: delivery 1
     is every event point; delivery 2 re-writes the error-type points
     with value+1000. The merge gate is ON (two deliveries), so every
     read through this engine exercises the last-write-wins path."""
-    key = f"{sf_dir}::upsert"
-    eng = _WAREHOUSES.get(key)
-    if eng is None:
-        from orestes_spark.config import SpaceConfig
-
-        eng = OrestesEngine(
-            spark,
-            tempfile.mkdtemp(prefix="orestes_wh_up_"),
-            spaces={"default": SpaceConfig(1)},
-        )
-        pts = events_as_points(spark, sf_dir)
-        eng._append(pts, "default")
-        eng._append(
-            pts.where(F.col("tags")["event_type"] == "error").withColumn(
-                "value", F.col("value") + 1000.0
-            ),
-            "default",
-        )
-        assert eng._merge_needed("default")
-        _WAREHOUSES[key] = eng
+    eng = OrestesEngine(
+        spark,
+        tempfile.mkdtemp(prefix="orestes_wh_up_"),
+        spaces={"default": SpaceConfig(1)},
+    )
+    pts = events_as_points(spark, sf_dir)
+    eng._append(pts, "default")
+    eng._append(
+        pts.where(F.col("tags")["event_type"] == "error").withColumn(
+            "value", F.col("value") + 1000.0
+        ),
+        "default",
+    )
+    assert eng._merge_needed("default")
     return eng
 
 
@@ -3184,27 +3043,22 @@ def os_engine_upsert(spark, sf_dir):
     )
 
 
+@artifact("tiered_warehouse", timed=False)
 def _tiered_engine_for(spark, sf_dir: str) -> OrestesEngine:
     """A separate warehouse that has been through the tiered-retention
     lifecycle: write → remove(keep_rollup=True). The raw 2024 buckets
     (all older than keep_days=0 against today's clock) are gone; only
     the continuous-rollup partials remain to serve history."""
-    key = f"{sf_dir}::tiered"
-    eng = _WAREHOUSES.get(key)
-    if eng is None:
-        from orestes_spark.config import SpaceConfig
-
-        eng = OrestesEngine(
-            spark,
-            tempfile.mkdtemp(prefix="orestes_wh_tier_"),
-            spaces={"default": SpaceConfig(1, rollup_step_ms=_HOUR)},
-        )
-        eng._append(events_as_points(spark, sf_dir), "default")
-        dropped = eng.remove("default", keep_days=0, keep_rollup=True)
-        assert dropped and eng._read_points("default") is None, (
-            "tiered retention must drop every raw bucket"
-        )
-        _WAREHOUSES[key] = eng
+    eng = OrestesEngine(
+        spark,
+        tempfile.mkdtemp(prefix="orestes_wh_tier_"),
+        spaces={"default": SpaceConfig(1, rollup_step_ms=_HOUR)},
+    )
+    eng._append(events_as_points(spark, sf_dir), "default")
+    dropped = eng.remove("default", keep_days=0, keep_rollup=True)
+    assert dropped and eng._read_points("default") is None, (
+        "tiered retention must drop every raw bucket"
+    )
     return eng
 
 
@@ -4138,6 +3992,16 @@ def doc_clean_corpus(spark, sf_dir):
     )
 
 
+@artifact("weekly_warehouse", timed=False)
+def _weekly_engine_for(spark, sf_dir: str) -> OrestesEngine:
+    """The events table in a warehouse of 7-day buckets."""
+    eng = OrestesEngine(
+        spark, tempfile.mkdtemp(prefix="orestes_whw_"), spaces={"weekly": SpaceConfig(7)}
+    )
+    eng._append(events_as_points(spark, sf_dir), "weekly")
+    return eng
+
+
 @register(
     "os_engine_weekly",
     f"""SELECT event_type, CAST(user_id AS VARCHAR) AS user_id, count(*) AS count
@@ -4147,16 +4011,7 @@ def doc_clean_corpus(spark, sf_dir):
 def os_engine_weekly(spark, sf_dir):
     """Engine path at table_granularity_days=7 (multi-space parity:
     weekly buckets → different partition layout, same answers)."""
-    from orestes_spark.config import SpaceConfig
-
-    key = sf_dir + "@weekly"
-    eng = _WAREHOUSES.get(key)
-    if eng is None:
-        eng = OrestesEngine(
-            spark, tempfile.mkdtemp(prefix="orestes_whw_"), spaces={"weekly": SpaceConfig(7)}
-        )
-        eng._append(events_as_points(spark, sf_dir), "weekly")
-        _WAREHOUSES[key] = eng
+    eng = _weekly_engine_for(spark, sf_dir)
     counts = eng.count_points({"terms": {"event_type": ["view", "signup"]}}, "weekly", T0, T1)
     return counts.select(
         F.col("tags").getItem("event_type").alias("event_type"),
@@ -4427,35 +4282,28 @@ def emb_semantic_dedup(spark, sf_dir):
     return similarity.semantic_dedup_arrow(e, threshold=0.35, quantize=1000)
 
 
-_SEM_INDEXES: dict[str, str] = {}
-
-
+@artifact("semantic_index")
 def _sem_index_for(spark, sf_dir) -> str:
-    """Build (once per process per sf_dir) and return the root path of
-    the persisted SemDeDup corpus index (vec_id % 5 != 0 plays the
-    already-deduped corpus): ``<root>/index`` (cluster-PARTITIONED, so
-    a batch's cell filter becomes partition pruning at the scan) and
-    ``<root>/cents`` (the k×d centroid-sum table, derived once at
-    build time so per-batch dedup never re-aggregates the corpus)."""
-    import tempfile
-
-    path = _SEM_INDEXES.get(sf_dir)
-    if path is None:
-        e = load_table(spark, sf_dir, "embeddings")
-        corpus = e.where(F.col("vec_id") % 5 != 0)
-        path = tempfile.mkdtemp(prefix="orestes_sem_idx_")
-        # write first, derive centroids from the re-read: same
-        # bit-exact result as deriving from the in-memory frame
-        # (assignment is deterministic) with ZERO corpus-sized pinned
-        # storage — a localCheckpoint here would materialize every
-        # index row into block storage just to save one recompute
-        similarity.semantic_index(corpus, quantize=1000).write.partitionBy(
-            "cluster"
-        ).parquet(path + "/index")
-        similarity.semantic_index_centroids(
-            spark.read.parquet(path + "/index")
-        ).write.parquet(path + "/cents")
-        _SEM_INDEXES[sf_dir] = path
+    """Build the persisted SemDeDup corpus index (vec_id % 5 != 0
+    plays the already-deduped corpus) and return its root path:
+    ``<root>/index`` (cluster-PARTITIONED, so a batch's cell filter
+    becomes partition pruning at the scan) and ``<root>/cents`` (the
+    k×d centroid-sum table, derived once at build time so per-batch
+    dedup never re-aggregates the corpus)."""
+    e = load_table(spark, sf_dir, "embeddings")
+    corpus = e.where(F.col("vec_id") % 5 != 0)
+    path = tempfile.mkdtemp(prefix="orestes_sem_idx_") + "/sem"
+    # write first, derive centroids from the re-read: same
+    # bit-exact result as deriving from the in-memory frame
+    # (assignment is deterministic) with ZERO corpus-sized pinned
+    # storage — a localCheckpoint here would materialize every
+    # index row into block storage just to save one recompute
+    similarity.semantic_index(corpus, quantize=1000).write.partitionBy(
+        "cluster"
+    ).parquet(path + "/index")
+    similarity.semantic_index_centroids(
+        spark.read.parquet(path + "/index")
+    ).write.parquet(path + "/cents")
     return path
 
 
@@ -5950,27 +5798,20 @@ def doc_winnowing(spark, sf_dir):
     return dedup.winnow_fingerprints(d, "doc_id", "text", k=5, w=4)
 
 
-_WINNOW_INDEXES: dict[str, str] = {}
-
-
+@artifact("winnow_print_index")
 def _winnow_index_for(spark, sf_dir) -> str:
-    """Build (once per process per sf_dir) and return the parquet path
-    of the corpus winnow fingerprint index used by
-    doc_incremental_winnow — the persisted artifact a per-ingest MOSS
-    deployment builds once (dedup.winnow_index), mirroring
-    _span_index_for: hash-range bucketed on the print and written
-    partitionBy("hb") so the per-batch probe partition-prunes."""
-    import tempfile
-
-    path = _WINNOW_INDEXES.get(sf_dir)
-    if path is None:
-        d = load_table(spark, sf_dir, "documents")
-        corpus = d.where(F.col("doc_id") % 5 != 0)
-        path = tempfile.mkdtemp(prefix="orestes_winnow_idx_") + "/prints"
-        dedup.winnow_index(
-            corpus, "doc_id", "text", k=5, w=4, max_df=50, buckets=_SPAN_BUCKETS
-        ).repartition(F.col("hb")).write.partitionBy("hb").parquet(path)
-        _WINNOW_INDEXES[sf_dir] = path
+    """Build the corpus winnow fingerprint index used by
+    doc_incremental_winnow and return its parquet path — the persisted
+    artifact a per-ingest MOSS deployment builds once
+    (dedup.winnow_index), mirroring _span_index_for: hash-range
+    bucketed on the print and written partitionBy("hb") so the
+    per-batch probe partition-prunes."""
+    d = load_table(spark, sf_dir, "documents")
+    corpus = d.where(F.col("doc_id") % 5 != 0)
+    path = tempfile.mkdtemp(prefix="orestes_winnow_idx_") + "/prints"
+    dedup.winnow_index(
+        corpus, "doc_id", "text", k=5, w=4, max_df=50, buckets=_SPAN_BUCKETS
+    ).repartition(F.col("hb")).write.partitionBy("hb").parquet(path)
     return path
 
 
@@ -6050,26 +5891,19 @@ def doc_containment(spark, sf_dir):
     return dedup.shingle_containment(probe, base, "doc_id", "text", n=5)
 
 
-_CONTAINMENT_INDEXES: dict[str, str] = {}
-
-
+@artifact("containment_kgram_index")
 def _containment_index_for(spark, sf_dir) -> str:
-    """Build (once per process per sf_dir) the base corpus's
-    distinct-5-gram hash index for the indexed containment route —
-    dedup.span_index over the doc_id % 20 != 0 split, hash-range
-    bucketed and written partitionBy("hb") so the probe
-    partition-prunes (the span-index artifact discipline)."""
-    import tempfile
-
-    path = _CONTAINMENT_INDEXES.get(sf_dir)
-    if path is None:
-        d = load_table(spark, sf_dir, "documents")
-        base = d.where(F.col("doc_id") % 20 != 0)
-        path = tempfile.mkdtemp(prefix="orestes_containment_idx_") + "/kgrams"
-        dedup.span_index(
-            base, "doc_id", "text", k=5, buckets=_SPAN_BUCKETS
-        ).repartition(F.col("hb")).write.partitionBy("hb").parquet(path)
-        _CONTAINMENT_INDEXES[sf_dir] = path
+    """Build the base corpus's distinct-5-gram hash index for the
+    indexed containment route — dedup.span_index over the
+    doc_id % 20 != 0 split, hash-range bucketed and written
+    partitionBy("hb") so the probe partition-prunes (the span-index
+    artifact discipline)."""
+    d = load_table(spark, sf_dir, "documents")
+    base = d.where(F.col("doc_id") % 20 != 0)
+    path = tempfile.mkdtemp(prefix="orestes_containment_idx_") + "/kgrams"
+    dedup.span_index(
+        base, "doc_id", "text", k=5, buckets=_SPAN_BUCKETS
+    ).repartition(F.col("hb")).write.partitionBy("hb").parquet(path)
     return path
 
 
@@ -6327,7 +6161,7 @@ def doc_dsir_weights(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     corpus = d.where(F.col("doc_id") % 20 != 0)
     return sampling.dsir_logratio_weights(
-        corpus, None, "doc_id", "text", weights=_dsir_wq_for(spark, sf_dir)
+        corpus, None, "doc_id", "text", weights=_dsir_codebooks(spark, sf_dir)[0]
     )
 
 
@@ -6784,11 +6618,9 @@ def _quality_report_sql() -> str:
         FROM j2"""
 
 
-_QR_LEGS: dict = {}
-
-
-def _qr_leg_cols(spark):
-    """Build (once per SparkContext) the quality report's static
+@artifact("quality_report_legs", timed=False)
+def _qr_leg_cols(spark, sf_dir):
+    """Build (once per session) the quality report's static
     per-row leg Columns — heuristic keep, Gopher keep, (prev, cur)
     pair structs. The expressions reference only F.col('text') and
     literals, so the py4j trees are reusable across calls; rebuilding
@@ -6796,10 +6628,6 @@ def _qr_leg_cols(spark):
     builders' round-12 finding, applied to the report card)."""
     from orestes_spark.operators.dedup import bind, normalize_text
 
-    key = spark.sparkContext
-    legs = _QR_LEGS.get("legs")
-    if legs is not None and _QR_LEGS.get("ctx") is key:
-        return legs
     toks_h = F.split(F.trim(F.col("text")), r"\s+")  # doc_quality: trim only
     stop = F.array([F.lit(s) for s in ["the", "a", "and", "of", "to", "in"]])
     kh = (
@@ -6843,10 +6671,7 @@ def _qr_leg_cols(spark):
             ),
         ),
     )
-    legs = (kh, kg, pair_structs)
-    _QR_LEGS["ctx"] = key
-    _QR_LEGS["legs"] = legs
-    return legs
+    return kh, kg, pair_structs
 
 
 @register("doc_quality_report", _quality_report_sql())
@@ -6891,9 +6716,9 @@ def doc_quality_report(spark, sf_dir):
             " compose the scorers"
         )
     model = _nb_model_for(spark, sf_dir).select("bucket", F.col("wq").alias("_wqm"))
-    wdf = _dsir_wq_for(spark, sf_dir).select("bucket", F.col("wq").alias("_wds"))
+    wdf = _dsir_codebooks(spark, sf_dir)[0].select("bucket", F.col("wq").alias("_wds"))
     vocab, pairs_df, fb_df = _bigram_lm_for(spark, sf_dir)
-    kh, kg, pair_structs = _qr_leg_cols(spark)
+    kh, kg, pair_structs = _qr_leg_cols(spark, sf_dir)
     # Round-12 opt (guide §1.3 plan shape): the per-DOC legs must be
     # projected BELOW the explode. `select(kh, kg, explode(ps))` plans
     # as Project[kh, kg, pr] ABOVE Generate — both array expressions
@@ -7111,7 +6936,7 @@ def doc_dsir_bigram(spark, sf_dir):
     corpus = d.where(F.col("doc_id") % 20 != 0)
     return sampling.dsir_logratio_weights(
         corpus, None, "doc_id", "text", bigrams=True,
-        weights=_dsir_wq_for(spark, sf_dir, bigrams=True),
+        weights=_dsir_codebooks(spark, sf_dir)[1],
     )
 
 
@@ -7131,7 +6956,7 @@ def doc_dsir_sample(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     corpus = d.where(F.col("doc_id") % 20 != 0)
     return sampling.dsir_resample(
-        corpus, None, "doc_id", "text", n=100, weights=_dsir_wq_for(spark, sf_dir)
+        corpus, None, "doc_id", "text", n=100, weights=_dsir_codebooks(spark, sf_dir)[0]
     )
 
 

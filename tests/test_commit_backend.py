@@ -1,6 +1,6 @@
 """The commit-backend seam (round-7): the three rename-dependent
-durability protocols as one swappable unit, POSIX default, plus the
-Delta prototype for the streaming-epoch-commit path."""
+durability protocols as one unit (POSIX), plus the table-format
+lease/fence protocol driven against in-memory logs."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ import json
 
 import pytest
 
-from orestes_spark.commit_backend import POSIX_BACKEND, delta_available
+from orestes_spark.commit_backend import POSIX_BACKEND
 
 
 def test_manifest_roundtrip_and_legacy_formats(tmp_path):
@@ -63,48 +63,9 @@ def test_swap_partition_replaces_and_bootstraps(tmp_path):
     assert (live2 / "a.parquet").exists()
 
 
-@pytest.mark.skipif(not delta_available(), reason="delta-spark not installed")
-def test_delta_epoch_sink_idempotent_replay(tmp_path):
-    """The Delta mapping of the streaming epoch commit: a replayed
-    epoch (same txnAppId/txnVersion) is a table-level no-op — the
-    exactly-once property the POSIX epoch markers enforce — and reads
-    are snapshot-atomic by the _delta_log."""
-    from delta import configure_spark_with_delta_pip
-    from pyspark.sql import SparkSession
-
-    from orestes_spark.commit_backend import DeltaEpochSink
-
-    builder = (
-        SparkSession.builder.master("local[2]")
-        .appName("delta-epoch-sink-test")
-        .config("spark.sql.extensions", "io.delta.sql.DeltaSparkSessionExtension")
-        .config(
-            "spark.sql.catalog.spark_catalog",
-            "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-        )
-    )
-    spark = configure_spark_with_delta_pip(builder).getOrCreate()
-    try:
-        sink = DeltaEpochSink(spark, str(tmp_path / "points_delta"))
-        batch = spark.createDataFrame(
-            [(1, 1000, 1.0), (2, 2000, 2.0)], "series_id long, time_ms long, value double"
-        )
-        sink.commit_epoch(batch, "file:/ckpt", epoch_id=0)
-        assert sink.visible().count() == 2
-        # crash-replay of the SAME epoch: skipped by Delta's txn watermark
-        sink.commit_epoch(batch, "file:/ckpt", epoch_id=0)
-        assert sink.visible().count() == 2
-        # the next epoch commits normally
-        sink.commit_epoch(batch, "file:/ckpt", epoch_id=1)
-        assert sink.visible().count() == 4
-    finally:
-        spark.stop()
-
-
 # ------------------------------------------- table-format writer lease ---
 
 from orestes_spark.commit_backend import (  # noqa: E402
-    DeltaPartitionSwap,
     LeaseStolenError,
     TableFormatWriterLease,
 )
@@ -238,13 +199,6 @@ def test_lease_replayed_acquire_is_idempotent():
     assert log.commits == n_commits
     assert len([r for r in log.read() if r["kind"] == "acquire"]) == 1
     l.release(h)
-
-
-def test_bucket_predicate_builder():
-    assert DeltaPartitionSwap.bucket_predicate([3, 1, 3]) == "bucket IN (1, 3)"
-    assert DeltaPartitionSwap.bucket_predicate([7], col="day") == "day IN (7)"
-    with pytest.raises(ValueError):
-        DeltaPartitionSwap.bucket_predicate([])
 
 
 # ------------------------------------- fence-carrying data commits ---
@@ -385,7 +339,11 @@ def test_fenced_maintenance_context_manager():
     # stalled cycle's release raises INSIDE the with-block exit, a held
     # lease raises ConcurrentWriterError, and a clean cycle's commits
     # carry monotone fenced versions.
+    from orestes_spark import engine
     from orestes_spark.commit_backend import ConcurrentWriterError, fenced_maintenance
+
+    # one class: `except engine.ConcurrentWriterError` catches the lease's refusal
+    assert engine.ConcurrentWriterError is ConcurrentWriterError
 
     lease_log = MemoryLeaseLog()
     l, now = _lease(lease_log, lease_ms=1000)
@@ -419,7 +377,7 @@ class _Conflict(Exception):
 
 
 def test_cas_append_stamps_and_retries():
-    # DeltaLeaseLog's persisted-seq mint: the loser of a seq race sees
+    # A lease log's persisted-seq mint: the loser of a seq race sees
     # a conflict and retries at the next seq — commit order == seq
     # order, which is all the first-commit tie-break needs.
     committed: list[tuple[int, list[dict]]] = []
@@ -457,7 +415,7 @@ def test_cas_append_stamps_and_retries():
 
 
 class MemoryMergeSeqLog:
-    """Honest in-memory twin of DeltaLeaseLog's round-10 commit shape
+    """Honest in-memory twin of a Delta lease log's commit shape
     (merge insert-if-absent + read-back), modeling BOTH ways a rival
     can take the claimed seq — the round-9 twin modeled every race as
     a conflict exception, which over-promised: a rival that commits
@@ -581,67 +539,3 @@ def test_heartbeat_survives_backwards_clock_step():
     assert len(hb_rows) == 2  # the post-step beat landed
     # liveness judged from the LATEST ts (max), unaffected by the step
     assert l.judge(log.read(), now["t"] + 900)["live"] is True
-
-
-@pytest.mark.skipif(not delta_available(), reason="delta-spark not installed")
-def test_delta_fenced_epoch_zombie_refused(tmp_path):
-    """Delta twin of test_zombie_epoch_replay_refused_by_data_table:
-    the fenced commit_epoch / claim_fence / resume_epoch_floor path
-    against a real _delta_log."""
-    from delta import configure_spark_with_delta_pip
-    from pyspark.sql import SparkSession
-
-    from orestes_spark.commit_backend import DeltaEpochSink
-
-    builder = (
-        SparkSession.builder.master("local[2]")
-        .appName("delta-fenced-epoch-test")
-        .config("spark.sql.extensions", "io.delta.sql.DeltaSparkSessionExtension")
-        .config(
-            "spark.sql.catalog.spark_catalog",
-            "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-        )
-    )
-    sp = configure_spark_with_delta_pip(builder).getOrCreate()
-    try:
-        sink = DeltaEpochSink(sp, str(tmp_path / "pts"))
-        batch = sp.createDataFrame([(1, 1000, 1.0)], "series_id long, time_ms long, value double")
-        sink.commit_epoch(batch, "ns", epoch_id=0, fence=1)
-        sink.commit_epoch(batch, "ns", epoch_id=1, fence=1)
-        assert sink.resume_epoch_floor("ns") == 1
-        sink.claim_fence("ns", fence=2, floor=1)
-        assert sink.resume_epoch_floor("ns") == 1  # claim preserves floor
-        n = sink.visible().count()
-        sink.commit_epoch(batch, "ns", epoch_id=2, fence=1)  # zombie
-        assert sink.visible().count() == n  # refused by the data table
-        sink.commit_epoch(batch, "ns", epoch_id=2, fence=2)  # successor
-        assert sink.visible().count() == n + 1
-    finally:
-        sp.stop()
-
-
-@pytest.mark.skipif(not delta_available(), reason="delta-spark not installed")
-def test_delta_lease_log_adapter(spark, tmp_path):
-    from orestes_spark.commit_backend import DeltaLeaseLog
-
-    log = DeltaLeaseLog(spark, str(tmp_path / "lease"))
-    l = TableFormatWriterLease(log, lease_ms=60_000)
-    h = l.acquire("writer-a", "append")
-    assert h is not None and l.acquire("writer-b", "append") is None
-    l.release(h)
-    assert l.judge(log.read(), l._clock())["live"] is False
-
-
-@pytest.mark.skipif(not delta_available(), reason="delta-spark not installed")
-def test_delta_partition_swap(spark, tmp_path):
-    path = str(tmp_path / "pts")
-    df = spark.createDataFrame([(1, 10.0), (2, 20.0)], "bucket INT, value DOUBLE")
-    df.write.format("delta").partitionBy("bucket").save(path)
-    sw = DeltaPartitionSwap(spark, path)
-    repl = spark.createDataFrame([(1, 99.0)], "bucket INT, value DOUBLE")
-    sw.swap(repl, sw.bucket_predicate([1]))
-    got = {(r.bucket, r.value) for r in spark.read.format("delta").load(path).collect()}
-    assert got == {(1, 99.0), (2, 20.0)}
-    sw.erase(sw.bucket_predicate([2]))
-    got = {(r.bucket, r.value) for r in spark.read.format("delta").load(path).collect()}
-    assert got == {(1, 99.0)}

@@ -226,6 +226,22 @@ def test_connected_components_long_path_and_cap(spark, monkeypatch):
         dedup.connected_components(path, max_iterations=2)
 
 
+def test_connected_components_null_id_fails_on_both_paths(spark, monkeypatch):
+    """A NULL id has no place in a closure: the distributed loop's
+    joins would drop its pairs silently, so both the driver path and
+    the distributed path must raise instead."""
+    import pytest
+
+    from orestes_spark.operators import dedup
+
+    pairs = spark.createDataFrame([(1, 2), (2, None)], "id_a LONG, id_b LONG")
+    with pytest.raises(Exception, match="NULL id"):
+        dedup.connected_components(pairs).collect()
+    monkeypatch.setattr(dedup, "_DRIVER_CC_MAX_EDGES", 0)
+    with pytest.raises(Exception, match="NULL id"):
+        dedup.connected_components(pairs).collect()
+
+
 def test_connected_components_driver_path_matches_distributed(spark, monkeypatch):
     """Round-12: the size-guarded driver union-find must label
     exactly like the distributed min-label loop — chains, merging
@@ -1267,48 +1283,3 @@ def test_incremental_simhash_pairs_bucketized_index_parity(spark, tmp_path):
     )
     assert m, plan  # pruned scan, not full index
     assert len(m.group(1).split(",")) <= 4
-
-
-def test_span_flags_hot_threshold_row_identical(spark, monkeypatch):
-    """Round-13 (VERDICT r12 #2, guide §2.5): the span family's
-    hot-key tier — a boilerplate k-gram planted in 30% of docs rides
-    the broadcast leg instead of the count window, and the output is
-    ROW-IDENTICAL to the plain single-window plan for every operator
-    flavor; the hardened plan's window input carries the hot-hash
-    anti-join so no window partition can reach hot_threshold rows."""
-    boiler = "computer program license header tokens alpha beta gamma"
-    rows = []
-    for i in range(30):
-        body = f"unique document {i} content words {i * 11} {i * 13} {i * 17} tail"
-        if i % 3 == 0:  # 30%: the hot k-gram
-            body = boiler + " " + body
-        rows.append((i, body))
-    # one genuine duplicated span pair besides the boilerplate
-    rows.append((100, "the exact shared span of nine tokens appears right here verbatim"))
-    rows.append((101, "the exact shared span of nine tokens appears right here verbatim"))
-    d = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    for kf in (False, True):
-        for mc in (None, 9):
-            plain = dedup._span_flags(d, "doc_id", "text", 8, 2, mc, kf)
-            hard = dedup._span_flags(
-                d, "doc_id", "text", 8, 2, mc, kf, hot_threshold=5
-            )
-            key = lambda r: (r["_id"], r["pos"], r["_canon"])
-            assert sorted(map(key, plain.collect())) == sorted(
-                map(key, hard.collect())
-            ), (kf, mc)
-    # env wiring: the public operators pick the tier up from the env
-    monkeypatch.setenv("ORESTES_SPAN_HOT_THRESHOLD", "5")
-    hard_env = dedup.repeated_spans(d, "doc_id", "text", k=8, min_count=2)
-    monkeypatch.setenv("ORESTES_SPAN_HOT_THRESHOLD", "")
-    plain_env = dedup.repeated_spans(d, "doc_id", "text", k=8, min_count=2)
-    key2 = lambda r: tuple(r)
-    assert sorted(map(key2, hard_env.collect())) == sorted(
-        map(key2, plain_env.collect())
-    )
-    # plan shape: hardened window sits above the hot-hash anti-join
-    hard = dedup._span_flags(d, "doc_id", "text", 8, 2, None, False, hot_threshold=5)
-    plan = hard._sc._jvm.PythonSQLUtils.explainString(
-        hard._jdf.queryExecution(), "formatted"
-    )
-    assert "LeftAnti" in plan and "Window" in plan

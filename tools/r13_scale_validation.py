@@ -11,11 +11,8 @@ process, min-of-N with /proc/stat steal stamps (the qbench protocol):
    (partition-pruned) vs plain (full scan per batch). Claim: pruned
    probe wall grows with touched buckets only; plain grows with the
    index.
-2. span hot-key tier (round-13 #2): repeated_spans on the
-   boilerplate-worst-case corpus (one shared k-gram in 30%% of docs)
-   with ORESTES_SPAN_HOT_THRESHOLD unset vs set. Claim: the hot tier
-   keeps wall ~linear as the hot group grows; the single-window plan
-   degrades with the one-task sort.
+2. (removed with the span hot-key tier it measured; SCALING.md §2
+   keeps its results)
 3. winnow df cut, anti-join vs count window (round-13 #2): the r12
    window form reimplemented inline as the A side. Same claim class.
 4. decontam GEMM (round-12 #12): semantic_decontaminate (expression)
@@ -118,24 +115,6 @@ def step_probe(spark) -> None:
         )
 
 
-def step_span(spark) -> None:
-    print("== 2. span duplicate test: single window vs hot tier ==")
-    for mult in (1, 4, 16):
-        d = synth_docs(spark, 2_000 * mult, hot_frac=0.3).localCheckpoint()
-        timed(
-            f"{mult:>2}x hot corpus, single-window plan",
-            lambda: noop(dedup._span_flags(d, "doc_id", "text", 8, 2, None, False)),
-        )
-        timed(
-            f"{mult:>2}x hot corpus, hot-tier plan (threshold=1000)",
-            lambda: noop(
-                dedup._span_flags(
-                    d, "doc_id", "text", 8, 2, None, False, hot_threshold=1000
-                )
-            ),
-        )
-
-
 def step_winnow(spark) -> None:
     print("== 3. winnow df cut: count window (r12) vs anti-join (r13) ==")
 
@@ -220,7 +199,6 @@ def main() -> None:
     spark.range(1000).selectExpr("sum(id)").collect()
     steps = {
         "probe": step_probe,
-        "span": step_span,
         "winnow": step_winnow,
         "gemm": step_gemm,
         "containment": step_containment,
